@@ -159,7 +159,9 @@ def test_tenant_purge(spark, tmp_path_factory):
 
 def test_update_event_on_changed_file(spark, tmp_path):
     """ST2 decision parity: re-ingesting a changed file emits an
-    'update' event; an unchanged file is skipped entirely."""
+    'update' event; an unchanged file is skipped entirely. An update
+    that shortens the document replaces ALL its chunks: none of the
+    old version's extra chunks survive or come back from search."""
     from the_hive_spark.engine import HiveEngine
 
     eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
@@ -168,14 +170,101 @@ def test_update_event_on_changed_file(spark, tmp_path):
         "path string, content string, organization_id string, "
         "metadata map<string,string>",
     )
-    assert eng.ingest_batch(mk("version one"))["files"] == 1
-    assert eng.ingest_batch(mk("version one"))["files"] == 0  # unchanged
-    assert eng.ingest_batch(mk("version two"))["files"] == 1  # changed
+    v1 = " ".join(
+        f"Paragraph {i} of version one discusses the walrus ledger at"
+        f" considerable length so that it fills a whole chunk." * 4
+        for i in range(6)
+    )
+    n_v1 = eng.ingest_batch(mk(v1))["chunks"]
+    assert n_v1 > 1
+    assert eng.ingest_batch(mk(v1))["files"] == 0  # unchanged
+    v2 = eng.ingest_batch(mk("Version two is a single short sentence."))
+    assert v2["files"] == 1  # changed
     types = [
         r["event_type"]
         for r in eng.read_table("events").orderBy("id").collect()
     ]
     assert types == ["ingest", "update"]
+    doc = eng.read_table("chunks").filter(F.col("document_id") == "/w/a.md")
+    assert doc.count() == v2["chunks"] == 1
+    hits = eng.search("walrus ledger", top_k=n_v1, audit=False).collect()
+    assert all("walrus" not in h["content"] for h in hits), hits
+
+
+def test_read_during_publish_sees_complete_old_version(
+    spark, tmp_path, monkeypatch
+):
+    """A reader that runs at the instant a commit publishes (here: the
+    replace of the chunks table's state, caught by wrapping os.replace)
+    sees the whole previous version, never an empty or partial table."""
+    import os
+
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+    eng.ingest_batch(seed_files(spark))
+    before = eng.read_table("chunks").count()
+    chunks_dir = os.path.join(str(tmp_path / "wh"), "chunks")
+    seen = []
+    real_replace = os.replace
+
+    def read_then_replace(src, dst):
+        if str(dst).startswith(chunks_dir):
+            seen.append(eng.read_table("chunks").count())
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", read_then_replace)
+    changed = spark.createDataFrame(
+        [("/watch/project_alpha.md", "Project Alpha, rewritten.", "", None)],
+        INGEST_FILES,
+    )
+    assert eng.ingest_batch(changed)["files"] == 1
+    assert seen == [before]
+
+
+def test_concurrent_reads_see_only_published_versions(spark, tmp_path):
+    """A reader looping on count() while ingest, update, forget_document
+    and purge commit to chunks sees only whole published versions: no
+    empty table, no partial batch, no exception."""
+    import threading
+
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+    eng.ingest_batch(spark.createDataFrame(
+        [("/watch/b_doc.txt", "tenant b content here", "orgB", None)],
+        INGEST_FILES,
+    ))
+    valid = {eng.read_table("chunks").count()}
+    seen: list[int] = []
+    errors: list[BaseException] = []
+    stop = threading.Event()
+
+    def reader():
+        while not stop.is_set():
+            try:
+                seen.append(eng.read_table("chunks").count())
+            except Exception as e:  # noqa: BLE001 - the test's subject
+                errors.append(e)
+
+    t = threading.Thread(target=reader)
+    t.start()
+    try:
+        steps = [
+            lambda: eng.ingest_batch(seed_files(spark, org="orgA")),
+            lambda: eng.ingest_batch(spark.createDataFrame(
+                [("/watch/project_alpha.md", "Alpha, short.", "orgA", None)],
+                INGEST_FILES,
+            )),
+            lambda: eng.forget_document("/watch/beta_analysis.md"),
+            lambda: eng.purge("orgA"),
+        ]
+        for step in steps:
+            step()
+            valid.add(eng.read_table("chunks").count())
+    finally:
+        stop.set()
+        t.join(timeout=120)
+    assert not t.is_alive()
+    assert not errors, errors
+    assert seen and set(seen) <= valid, (sorted(set(seen)), sorted(valid))
+    assert 0 not in valid
 
 
 def test_ship_corpus_layout_and_roundtrip(spark, tmp_path):

@@ -139,6 +139,30 @@ def test_engine_chat_plan(plan_engine):
     assert "CartesianProduct" not in plan
 
 
+def test_table_read_cost_flat_in_live_file_count(spark, tmp_path):
+    """Counting a table with more than 32 live files launches no more
+    Spark jobs than counting a one-file table. An explicit list of that
+    many paths would start Spark's parallel-listing job on every read;
+    audit_logs gains a file per audited search."""
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+    sc = spark.sparkContext
+
+    def count_jobs(group):
+        sc.setJobGroup(group, group)
+        try:
+            eng.read_table("audit_logs").count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    eng._audit_row("t", "SEARCH", "first", "")
+    one_file = count_jobs("read_cost_1")
+    for i in range(39):
+        eng._audit_row("t", "SEARCH", f"search {i}", "")
+    assert len(eng._manifest("audit_logs")["files"]) == 40
+    assert count_jobs("read_cost_40") <= one_file
+
+
 def test_engine_contradiction_batch_path_broadcasts_batch(plan_engine):
     """contradiction_candidates(new_doc_ids=[...]): the small NEW
     batch broadcasts against one corpus pass — every broadcast subtree

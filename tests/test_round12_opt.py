@@ -81,8 +81,6 @@ def test_band_pair_candidates_equal_filtered_band_pairs(spark, sf_smoke):
         return tuple([doc_id] + [f"{v:04x}" for v in base])
 
     b1 = list(range(N_MINHASH))
-    b3 = list(b1)
-    b3[2], b3[3] = b1[2], b1[3]  # band 1 equal
     b3 = [v if i in (2, 3) else v + 100 for i, v in enumerate(b1)]
     b4 = [v if i in (2, 3, 4, 5) else v + 200 for i, v in enumerate(b1)]
     b5 = [v + 300 for v in b1]

@@ -11,20 +11,25 @@ provider, LLM) are mockable pandas UDFs; everything else is built-in
 DataFrame ops.
 
 Scale notes: tenant tables partition by organization_id (partition
-pruning = tenancy, SURVEY.md §1.3); upserts are id-keyed
-anti-join+append (Delta MERGE INTO is the drop-in at cluster scale —
-the local parquet swap emulates it); search is a shuffle-free scan +
+pruning = tenancy, SURVEY.md §1.3). Every table write is one
+``_commit``: drop rows by key or predicate, rewrite only the files that
+held them, append, and publish the new file list by atomically
+replacing the table's manifest (the Delta/Dremel commit shape, written
+out on the local filesystem). Search is a shuffle-free scan +
 TakeOrdered(k).
 """
 
 from __future__ import annotations
 
+import fcntl
+import json
 import logging
 import os
-import shutil
+from functools import reduce
 
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from the_hive_spark import schemas
 from the_hive_spark.functions.chunkers import chunk_sentence_udf
@@ -73,6 +78,8 @@ _TABLE_SCHEMAS = {
 
 # tables physically partitioned by tenant
 _ORG_PARTITIONED = {"chunks", "audit_logs"}
+# per-table list of live files (hidden from Spark's listing by the "_")
+_MANIFEST = "_manifest.json"
 
 
 class HiveEngine:
@@ -93,42 +100,129 @@ class HiveEngine:
         os.makedirs(warehouse, exist_ok=True)
 
     # ------------------------------------------------------------- storage
+    # A table is warehouse/<table>/ (organization_id=<v>/ subdirectories
+    # for _ORG_PARTITIONED): parquet files plus _manifest.json, which
+    # lists the live ones. Readers see only those; _commit is the writer.
 
     def _path(self, name: str) -> str:
         return os.path.join(self.warehouse, name)
 
+    def _manifest(self, name: str) -> dict:
+        try:
+            with open(os.path.join(self._path(name), _MANIFEST)) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            return {"version": 0, "files": [], "unpublished": []}
+
     def read_table(self, name: str) -> DataFrame:
-        path = self._path(name)
-        schema = _TABLE_SCHEMAS[name]
-        if not os.path.exists(path):
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(path)
+        return self._scan(name, self._manifest(name)["files"])
 
-    def _append(self, name: str, df: DataFrame) -> None:
-        writer = df.write.mode("append")
-        if name in _ORG_PARTITIONED:
-            writer = writer.partitionBy("organization_id")
-        writer.parquet(self._path(name))
+    def _scan(self, name: str, files: list[str]) -> DataFrame:
+        """Rows of ``files`` (relative paths). A directory read filtered
+        on file name, so Spark prunes the rest while planning; a list of
+        over 32 explicit paths would launch a parallel-listing job."""
+        if not files:
+            return self.spark.createDataFrame([], _TABLE_SCHEMAS[name])
+        return (
+            self.spark.read.schema(_TABLE_SCHEMAS[name])
+            .parquet(self._path(name))
+            .filter(F.col("_metadata.file_name").isin([os.path.basename(f) for f in files]))
+        )
 
-    def _replace(self, name: str, df: DataFrame) -> None:
-        """Full-table swap (read side is materialized first so we can
-        overwrite the same dir; at cluster scale this is MERGE INTO)."""
-        tmp = self._path(name) + ".tmp"
+    def _commit(
+        self,
+        name: str,
+        add: DataFrame | None = None,
+        drop: list[str] | Column | None = None,
+    ) -> int:
+        """The one table write: drop rows sharing a key with ``add``
+        (``drop`` = key columns) or matching a predicate (``drop`` =
+        Column), then append ``add``. One probe query counts dropped rows
+        per live file; only those files are rewritten. Under a per-table
+        lock, new files are staged in a hidden directory, moved in and
+        published by atomically replacing the manifest. Files a commit
+        unpublishes are deleted by the next one, so a reader holding the
+        previous file list keeps working. Returns the rows dropped."""
+        root = self._path(name)
+        os.makedirs(root, exist_ok=True)
+        with open(os.path.join(root, "_lock"), "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            cur = self._manifest(name)
+            version, hits = cur["version"] + 1, {}
+            by_key = isinstance(drop, list)
+            if isinstance(drop, Column):
+                drop = F.coalesce(drop, F.lit(False))
+            if drop is not None and cur["files"]:
+                live = self._scan(name, cur["files"]).withColumn(
+                    "_file", F.col("_metadata.file_name")
+                )
+                doomed = (
+                    live.join(add.select(*drop), drop, "left_semi") if by_key
+                    else live.filter(drop)
+                )
+                hits = dict(doomed.groupBy("_file").count().collect())
+            if add is None and not hits:
+                return 0
+            gone = [f for f in cur["files"] if os.path.basename(f) in hits]
+            parts = [] if add is None else [add]
+            # a file that loses only some rows is rewritten without them
+            partial = [
+                f for f in gone
+                if pq.read_metadata(os.path.join(root, f)).num_rows
+                > hits[os.path.basename(f)]
+            ]
+            if partial:
+                kept = self._scan(name, partial)
+                parts.append(
+                    kept.join(add.select(*drop), drop, "left_anti") if by_key
+                    else kept.filter(~drop)
+                )
+            files = [f for f in cur["files"] if f not in gone]
+            if parts:
+                cols = _TABLE_SCHEMAS[name].fieldNames()
+                out = reduce(DataFrame.unionByName, [p.select(*cols) for p in parts])
+                files += self._stage_and_move(name, version, out)
+            tmp = os.path.join(root, _MANIFEST + ".tmp")
+            with open(tmp, "w") as fh:
+                json.dump({"version": version, "files": files, "unpublished": gone}, fh)
+            os.replace(tmp, os.path.join(root, _MANIFEST))
+            for f in cur["unpublished"]:
+                os.remove(os.path.join(root, f))
+        return sum(hits.values())
+
+    def _stage_and_move(self, name: str, version: int, df: DataFrame) -> list[str]:
+        """Write ``df`` to a hidden staging directory in the table, move
+        its parquet files in under names unique to this commit and
+        return their relative paths."""
+        root = self._path(name)
+        stage = os.path.join(root, f"_stage-{version}")
         writer = df.write.mode("overwrite")
         if name in _ORG_PARTITIONED:
             writer = writer.partitionBy("organization_id")
-        writer.parquet(tmp)
-        final = self._path(name)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.replace(tmp, final)
+        writer.parquet(stage)
+        moved: list[str] = []
+        for dirpath, _, names in os.walk(stage, topdown=False):
+            sub = os.path.relpath(dirpath, stage)
+            for n in names:
+                if n.endswith(".parquet"):
+                    new = f"part-{version:05d}-{len(moved):05d}.parquet"
+                    rel = os.path.normpath(os.path.join(sub, new))
+                    os.makedirs(os.path.join(root, sub), exist_ok=True)
+                    os.rename(os.path.join(dirpath, n), os.path.join(root, rel))
+                    moved.append(rel)
+                else:
+                    os.remove(os.path.join(dirpath, n))
+            os.rmdir(dirpath)
+        return moved
+
+    def _append(self, name: str, df: DataFrame) -> None:
+        self._commit(name, df)
+
+    def _replace(self, name: str, df: DataFrame) -> None:
+        self._commit(name, df, F.lit(True))
 
     def _upsert(self, name: str, new: DataFrame, key_cols: list[str]) -> None:
-        """Idempotent MERGE-by-key: new rows win over existing (ST4,
-        the INSERT OR REPLACE semantics of hive_service.go:81-86)."""
-        existing = self.read_table(name)
-        keep = existing.join(new.select(*key_cols).distinct(), key_cols, "left_anti")
-        self._replace(name, keep.unionByName(new.select(*existing.columns)))
+        self._commit(name, new, key_cols)
 
     # -------------------------------------------------------------- ingest
 
@@ -218,7 +312,8 @@ class HiveEngine:
             F.slice(tag_arr, 1, 5).alias("tags"),
         ).cache()
         n_chunks = chunk_rows.count()
-        self._upsert("chunks", chunk_rows, ["id"])
+        # keyed by document: an update drops every old chunk of the doc
+        self._upsert("chunks", chunk_rows, ["document_id"])
 
         # events: one ingest|update event per document (events.go:36-62;
         # the type reflects the ST2 new-vs-changed decision)
@@ -603,21 +698,13 @@ class HiveEngine:
         return key
 
     def set_api_key_active(self, key: str, active: bool) -> None:
-        keys = self.read_table("api_keys").withColumn(
-            "is_active",
-            F.when(F.col("key") == key, F.lit(active)).otherwise(F.col("is_active")),
-        )
-        self._replace("api_keys", keys)
+        self._update("api_keys", F.col("key") == key, is_active=F.lit(active))
 
     def touch_api_key(self, key: str) -> None:
         """ST6 heartbeat: mark last_seen now (api_keys.go:276-310)."""
-        keys = self.read_table("api_keys").withColumn(
-            "last_seen_at",
-            F.when(F.col("key") == key, F.current_timestamp()).otherwise(
-                F.col("last_seen_at")
-            ),
+        self._update(
+            "api_keys", F.col("key") == key, last_seen_at=F.current_timestamp()
         )
-        self._replace("api_keys", keys)
 
     def clients_status(self) -> DataFrame:
         """A6 online derivation + F12 key masking for display."""
@@ -676,20 +763,10 @@ class HiveEngine:
     def set_user_role(self, user_id: str, role: str) -> None:
         if role not in self.ROLES:
             raise ValueError(f"unknown role {role!r}; expected one of {self.ROLES}")
-        users = self.read_table("users").withColumn(
-            "role",
-            F.when(F.col("user_id") == user_id, F.lit(role)).otherwise(F.col("role")),
-        )
-        self._replace("users", users)
+        self._update("users", F.col("user_id") == user_id, role=F.lit(role))
 
     def set_user_active(self, user_id: str, active: bool) -> None:
-        users = self.read_table("users").withColumn(
-            "is_active",
-            F.when(F.col("user_id") == user_id, F.lit(active)).otherwise(
-                F.col("is_active")
-            ),
-        )
-        self._replace("users", users)
+        self._update("users", F.col("user_id") == user_id, is_active=F.lit(active))
 
     def users(self, organization_id: str | None = None) -> DataFrame:
         df = self.read_table("users")
@@ -1099,21 +1176,12 @@ class HiveEngine:
 
     def purge(self, organization_id: str | None = None) -> None:
         """S16: tenant purge = partition drop; full purge = table reset."""
-        if organization_id is None:
-            for t in ("chunks", "documents"):
-                p = self._path(t)
-                if os.path.exists(p):
-                    shutil.rmtree(p)
-            return
-        chunks = self.read_table("chunks").filter(
-            F.col("organization_id") != organization_id
+        doomed = (
+            F.lit(True) if organization_id is None
+            else F.col("organization_id") == organization_id
         )
-        self._replace("chunks", chunks)
-        docs = self.read_table("documents").filter(
-            (F.col("organization_id").isNull())
-            | (F.col("organization_id") != organization_id)
-        )
-        self._replace("documents", docs)
+        for t in ("chunks", "documents"):
+            self._commit(t, drop=doomed)
 
     def integrity_report(self) -> DataFrame:
         """Warehouse self-audit: orphan counts for every internal
@@ -1125,8 +1193,6 @@ class HiveEngine:
         (operators/analytics.py::q_referential_integrity_audit).
         A non-zero row means an upsert/purge path broke atomicity.
         """
-        from functools import reduce
-
         checks = [
             ("chunks.document_id -> documents", "chunks", "document_id",
              "documents", "id"),
@@ -1176,13 +1242,9 @@ class HiveEngine:
         row recording the erasure (the one trace that legally should
         remain). Returns per-table deleted-row counts.
 
-        At cluster scale each filter is an anti-join rewrite of the
-        table (Delta DELETE WHERE); row groups that don't contain the
-        key are skipped by parquet min/max stats when the tables are
-        clustered on their document keys (sinks.write_dataset's
-        sort_within convention).
+        Each table is one predicate commit: its probe counts the rows
+        to delete, and only the files holding them are rewritten.
         """
-        deleted: dict[str, int] = {}
         preds = {
             "documents": F.col("id") == document_id,
             "chunks": F.col("document_id") == document_id,
@@ -1193,12 +1255,7 @@ class HiveEngine:
             "graph_edges": (F.col("source_doc_id") == document_id)
             | (F.col("target_doc_id") == document_id),
         }
-        for tbl, pred in preds.items():
-            t = self.read_table(tbl)
-            n = t.filter(pred).count()
-            deleted[tbl] = n
-            if n:
-                self._replace(tbl, t.filter(~pred))
+        deleted = {tbl: self._commit(tbl, drop=pred) for tbl, pred in preds.items()}
         self._audit_row(
             "127.0.0.1",
             "FORGET",
@@ -1216,6 +1273,11 @@ class HiveEngine:
         return mock_embedding_np(query, self.embedding_dim)
 
     # ------------------------------------------------------------- helpers
+
+    def _update(self, name: str, where: Column, **values: Column) -> None:
+        """Set ``values`` on the rows of ``name`` matching ``where``."""
+        rows = self.read_table(name).filter(where).withColumns(values)
+        self._commit(name, rows, where)
 
     def _next_id(self, name: str) -> int:
         t = self.read_table(name)

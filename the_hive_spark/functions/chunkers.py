@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
@@ -90,25 +90,3 @@ def chunk_sentence_py(
 @pandas_udf(ArrayType(StringType()))
 def chunk_sentence_udf(texts: pd.Series) -> pd.Series:
     return texts.map(lambda t: chunk_sentence_py(t) if t is not None else [])
-
-
-def chunk_documents(
-    df: DataFrame,
-    text_col: str = "content",
-    id_col: str = "path",
-    sentence_aware: bool = True,
-) -> DataFrame:
-    """1 row → N chunk rows with (document_id, chunk_index, content).
-
-    sentence_aware=True is the server ingest path (F2), False the
-    drone path (F1, pure JVM)."""
-    arr = (
-        chunk_sentence_udf(F.col(text_col))
-        if sentence_aware
-        else chunk_fixed_expr(text_col)
-    )
-    return df.withColumn("_chunks", arr).select(
-        F.col(id_col).alias("document_id"),
-        F.posexplode("_chunks").alias("chunk_index", "content"),
-        *[c for c in df.columns if c not in (text_col, id_col)],
-    )

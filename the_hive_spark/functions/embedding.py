@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, FloatType
 
@@ -248,10 +247,3 @@ def make_embedder(
         )
         return make_http_embedder(endpoint, model, dim, transport=transport)
     raise ValueError(f"unknown embedding provider: {provider}")
-
-
-def zero_vector(dim: int = 1536) -> Column:
-    """F6 no-API-key fallback: 1536-dim zeros (ai/openai.go:17-23)."""
-    import pyspark.sql.functions as F
-
-    return F.array_repeat(F.lit(0.0).cast("float"), dim)

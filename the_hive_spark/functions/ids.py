@@ -37,12 +37,6 @@ def sha256_hex(content: Column) -> Column:
     return F.sha2(content, 256)
 
 
-def digest_chunk_id(doc_id: Column, chunk_index: Column) -> Column:
-    """Portable md5 digest id — same determinism contract as uuid5 but
-    expressible in any SQL engine (used by oracle-checked queries)."""
-    return F.md5(F.concat(doc_id.cast("string"), F.lit("-"), chunk_index.cast("string")))
-
-
 def dense_sequential_ids(
     df,
     order_col: str | list[str],

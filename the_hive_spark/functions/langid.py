@@ -45,13 +45,6 @@ def tokens_expr(text_col: str = "text") -> Column:
     return F.expr(_tokens(text_col))
 
 
-def lang_hit_counts(text_col: str = "text") -> dict[str, Column]:
-    """Per-language stopword hit counts as JVM expressions
-    (tokenization inlined — prefer lang_hit_counts_from_tokens over a
-    precomputed tokens column in anything row-count-heavy)."""
-    return lang_hit_counts_from_tokens(_tokens(text_col))
-
-
 def lang_hit_counts_from_tokens(toks_sql: str) -> dict[str, Column]:
     """Per-language hit counts over an existing token-array expression
     or column name."""

@@ -88,8 +88,3 @@ def mask_key(key: Column) -> Column:
         F.length(key) >= 8,
         F.concat(F.substring(key, 1, 3), F.lit("****"), F.substring(key, -4, 4)),
     ).otherwise(F.lit("****"))
-
-
-def audit_message(template: str, *cols: Column) -> Column:
-    """F13 audit templating (search_handler.go:180 style)."""
-    return F.format_string(template, *cols)

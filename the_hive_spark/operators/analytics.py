@@ -3017,8 +3017,8 @@ def q_part_substitution_candidates(spark: SparkSession, sf_dir: str) -> DataFram
     figure is contention-sensitive), where the 10×-clone corpus
     genuinely qualifies ~4e8 pairs (every part gains 9 same-price
     clones), so the remaining cost IS the output, not the candidate
-    generation — and needs no ANALYZE-style pre-scan at all: plan
-    construction is lazy like every other registry query.)"""
+    generation. Plan construction is not lazy: one eager probe counts
+    zero-difference pairs first and picks the plan, see below.)"""
     p = table(spark, sf_dir, "part").select(
         "p_partkey",
         "p_brand",

@@ -1677,8 +1677,6 @@ def doc_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `left+right not in w` prefilter only skips passes that cannot
     # match — the symbol list always concatenates back to w, so an
     # adjacent (left, right) implies the substring.
-    import numpy as np
-
     def encode_batches(batches):
         cache: dict = {}
 

@@ -23,11 +23,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    """The Catalyst-optimized logical plan string."""
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def pushed_filters(plan: str) -> list[str]:
     """Every PushedFilters list in the plan, flattened."""
     out: list[str] = []

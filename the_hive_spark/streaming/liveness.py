@@ -27,13 +27,3 @@ def online_clients(api_keys: DataFrame, now: Column | None = None) -> DataFrame:
     return api_keys.withColumn(
         "is_online", F.col("is_active") & is_online(F.col("last_seen_at"), now)
     )
-
-
-def heartbeat_liveness(heartbeats: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Streaming: max(ts) per client key from a (key, ts) heartbeat
-    stream; join against api_keys downstream for is_active."""
-    return (
-        heartbeats.withWatermark("ts", watermark)
-        .groupBy("key")
-        .agg(F.max("ts").alias("last_seen_at"))
-    )

@@ -48,10 +48,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all tables as temp views so ``spark.sql`` works directly."""
     for name in TABLE_NAMES:
