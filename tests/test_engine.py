@@ -409,3 +409,143 @@ def test_integrity_report_clean_then_detects_orphans(spark, tmp_path_factory):
     eng._replace("documents", docs)
     report2 = {r["fk"]: r for r in eng.integrity_report().collect()}
     assert report2["chunks.document_id -> documents"]["n_orphans"] > 0
+
+
+def test_concurrent_audit_ids_dense_and_unique(spark, tmp_path):
+    """Audit ids come from the manifest's next_id under the table lock:
+    4 threads x 10 appends, split over two engines on one warehouse,
+    give exactly 40 new rows with ids range(base, base + 40)."""
+    import sys
+    import threading
+
+    wh = str(tmp_path / "wh")
+    engines = [HiveEngine(spark, wh, embedding_dim=16) for _ in range(2)]
+    engines[0]._audit_row("t", "SEARCH", "seed row", "")
+    base = engines[1]._next_id("audit_logs")
+    errors: list[BaseException] = []
+
+    def worker(k):
+        try:
+            for i in range(10):
+                engines[k % 2]._audit_row("t", "SEARCH", f"w{k}-{i}", f"org{k}")
+        except Exception as e:  # noqa: BLE001 - the test's subject
+            errors.append(e)
+
+    threads = [threading.Thread(target=worker, args=(k,)) for k in range(4)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    rows = engines[0].read_table("audit_logs").filter(
+        F.col("details").startswith("w")
+    ).collect()
+    assert len(rows) == 40
+    assert sorted(r["id"] for r in rows) == list(range(base, base + 40))
+    assert engines[1]._next_id("audit_logs") == base + 40
+
+
+def test_python_rows_read_back_like_spark_rows(spark, tmp_path):
+    """The same rows committed as a DataFrame (Spark write) and as
+    Python rows (pyarrow write) read back identically and land in the
+    same partition directories: "" and None share Spark's default
+    partition, escaped values match, timestamps keep microseconds."""
+    import os
+    from datetime import datetime, timedelta, timezone
+
+    import pyarrow.parquet as pq
+
+    from the_hive_spark import schemas
+
+    ts = datetime(2026, 3, 4, 5, 6, 7, 123456, tzinfo=timezone(timedelta(hours=2)))
+    naive = datetime(2026, 3, 4, 5, 6, 7, 654321)
+    orgs = ["tenant0", "", None, "a/b", "x=y", "t 1"]
+    audit = [
+        (i, [ts, naive, None][i % 3], "10.0.0.1", "SEARCH", f"d{i}", org)
+        for i, org in enumerate(orgs)
+    ]
+    cites = [("/w/a.md", "c1", "alpha text", 0.25), ("/w/b.md", None, None, None)]
+    msgs = [("s1", 1, "assistant", "answer", cites, ts),
+            ("s1", 0, "user", "question", [], None)]
+    by_df = HiveEngine(spark, str(tmp_path / "df"), embedding_dim=16)
+    by_rows = HiveEngine(spark, str(tmp_path / "rows"), embedding_dim=16)
+    by_df._commit("audit_logs", spark.createDataFrame(audit, schemas.AUDIT_LOGS))
+    by_df._commit("chat_messages", spark.createDataFrame(msgs, schemas.CHAT_MESSAGES))
+    by_rows._commit("audit_logs", audit)
+    by_rows._commit("chat_messages", msgs)
+
+    for name, key in (("audit_logs", "id"), ("chat_messages", "message_index")):
+        a = by_df.read_table(name).orderBy(key)
+        b = by_rows.read_table(name).orderBy(key)
+        assert a.schema == b.schema
+        assert a.collect() == b.collect(), name
+    got = by_rows.read_table("audit_logs").orderBy("id").collect()
+    assert [r["id"] for r in got] == list(range(1, 7))
+    assert got[0]["timestamp"].microsecond == 123456
+    assert got[1]["timestamp"].microsecond == 654321
+    assert [r["organization_id"] for r in got] == [
+        "tenant0", None, None, "a/b", "x=y", "t 1"
+    ]
+    answer = by_rows.read_table("chat_messages").filter("message_index = 1").first()
+    assert answer["citations"][0]["score"] == 0.25
+    assert answer["citations"][1]["chunk_id"] is None
+
+    def partitions(eng):
+        root = eng._path("audit_logs")
+        return sorted(d for d in os.listdir(root) if d.startswith("organization_id="))
+
+    assert partitions(by_rows) == partitions(by_df)
+    assert "organization_id=__HIVE_DEFAULT_PARTITION__" in partitions(by_rows)
+    # small files: no embedded Arrow schema, column statistics kept
+    first = by_rows._manifest("audit_logs")["files"][0]
+    meta = pq.read_metadata(os.path.join(by_rows._path("audit_logs"), first))
+    assert b"ARROW:schema" not in (meta.metadata or {})
+    assert meta.row_group(0).column(0).statistics is not None
+
+
+def test_chat_persists_exactly_what_it_returns(spark, tmp_path):
+    """A persisted chat runs retrieval once: the caller's collect()
+    launches no Spark job and returns the stored row, whatever commits
+    to chunks land after persisting."""
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=32)
+    eng.ingest_batch(seed_files(spark))
+    persist = eng._persist_chat
+
+    def persist_then_replace_chunks(*args):
+        persist(*args)
+        # two commits: the purge unpublishes every chunk file and the
+        # ingest deletes them, all before the caller collects
+        eng.purge()
+        eng.ingest_batch(spark.createDataFrame(
+            [("/watch/other.md", "Unrelated text arrives.", "", None)],
+            INGEST_FILES,
+        ))
+
+    eng._persist_chat = persist_then_replace_chunks
+    df = eng.chat("Project Alpha confidential report", top_k=3, session_id="s1")
+    sc = spark.sparkContext
+    sc.setJobGroup("chat_caller_collect", "chat_caller_collect")
+    try:
+        out = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # no second retrieval: the caller collects the row already stored
+    assert sc.statusTracker().getJobIdsForGroup("chat_caller_collect") == []
+    assert len(out) == 1 and len(out[0]["citations"]) == 3
+    assert df.schema == eng.chat("any").schema
+    stored = eng.chat_history("s1").collect()
+    assert [m["message_index"] for m in stored] == [0, 1]
+    assert stored[1]["citations"] == out[0]["citations"]
+    assert stored[1]["content"] == out[0]["answer"]
+    # the session exists once; the next exchange continues its indexes
+    eng._persist_chat = persist
+    eng.chat("anything", session_id="s1").collect()
+    history = eng.chat_history("s1").collect()
+    assert [m["message_index"] for m in history] == [0, 1, 2, 3]
+    assert eng.read_table("chat_sessions").count() == 1

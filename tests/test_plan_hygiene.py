@@ -163,6 +163,30 @@ def test_table_read_cost_flat_in_live_file_count(spark, tmp_path):
     assert count_jobs("read_cost_40") <= one_file
 
 
+def _jobs_in(spark, group, fn) -> int:
+    """Spark jobs ``fn`` launches, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_audit_append_launches_no_spark_job(spark, plan_engine):
+    """The audit row is written by pyarrow and its id comes from the
+    manifest: an audited search launches exactly the jobs of an
+    unaudited one, and the append itself launches none."""
+    search = lambda audit: plan_engine.search(  # noqa: E731
+        "alpha", audit=audit).collect()
+    assert _jobs_in(spark, "search_audited", lambda: search(True)) == _jobs_in(
+        spark, "search_unaudited", lambda: search(False))
+    assert _jobs_in(spark, "audit_row", lambda: plan_engine._audit_row(
+        "t", "SEARCH", "no job", "org1")) == 0
+    assert _jobs_in(spark, "next_id", lambda: plan_engine._next_id("audit_logs")) == 0
+
+
 def test_engine_contradiction_batch_path_broadcasts_batch(plan_engine):
     """contradiction_candidates(new_doc_ids=[...]): the small NEW
     batch broadcasts against one corpus pass — every broadcast subtree

@@ -15,8 +15,14 @@ pruning = tenancy, SURVEY.md §1.3). Every table write is one
 ``_commit``: drop rows by key or predicate, rewrite only the files that
 held them, append, and publish the new file list by atomically
 replacing the table's manifest (the Delta/Dremel commit shape, written
-out on the local filesystem). Search is a shuffle-free scan +
-TakeOrdered(k).
+out on the local filesystem). A commit stages a DataFrame with one Spark
+write, and rows already in driver memory (audit rows, chat messages)
+with ``pyarrow.parquet.write_table`` into the partition directory Spark
+would have chosen, so a one-row append runs no Spark job. ``events`` and
+``audit_logs`` keep ``next_id`` in their manifest: callers number added
+rows from 0 and the commit offsets them under the table lock, so ids stay
+dense and unique in commit order across threads and processes. Search is
+a shuffle-free scan + TakeOrdered(k).
 """
 
 from __future__ import annotations
@@ -25,11 +31,15 @@ import fcntl
 import json
 import logging
 import os
+from datetime import datetime, timezone
 from functools import reduce
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import TimestampType
 
 from the_hive_spark import schemas
 from the_hive_spark.functions.chunkers import chunk_sentence_udf
@@ -78,8 +88,12 @@ _TABLE_SCHEMAS = {
 
 # tables physically partitioned by tenant
 _ORG_PARTITIONED = {"chunks", "audit_logs"}
+# tables whose "id" the commit numbers from the manifest's next_id
+_NUMBERED = {"events", "audit_logs"}
 # per-table list of live files (hidden from Spark's listing by the "_")
 _MANIFEST = "_manifest.json"
+# characters Spark percent-escapes in a partition directory name
+_PATH_ESCAPED = frozenset(map(chr, range(1, 32))) | set("\"#%'*/:=?[\\]^{\x7f")
 
 
 class HiveEngine:
@@ -102,7 +116,8 @@ class HiveEngine:
     # ------------------------------------------------------------- storage
     # A table is warehouse/<table>/ (organization_id=<v>/ subdirectories
     # for _ORG_PARTITIONED): parquet files plus _manifest.json, which
-    # lists the live ones. Readers see only those; _commit is the writer.
+    # lists the live ones (and, for _NUMBERED tables, the next free id).
+    # Readers see only those; _commit is the writer.
 
     def _path(self, name: str) -> str:
         return os.path.join(self.warehouse, name)
@@ -112,7 +127,7 @@ class HiveEngine:
             with open(os.path.join(self._path(name), _MANIFEST)) as fh:
                 return json.load(fh)
         except FileNotFoundError:
-            return {"version": 0, "files": [], "unpublished": []}
+            return {"version": 0, "files": [], "unpublished": [], "next_id": 1}
 
     def read_table(self, name: str) -> DataFrame:
         return self._scan(name, self._manifest(name)["files"])
@@ -132,17 +147,23 @@ class HiveEngine:
     def _commit(
         self,
         name: str,
-        add: DataFrame | None = None,
+        add: DataFrame | list[tuple] | None = None,
         drop: list[str] | Column | None = None,
     ) -> int:
         """The one table write: drop rows sharing a key with ``add``
         (``drop`` = key columns) or matching a predicate (``drop`` =
-        Column), then append ``add``. One probe query counts dropped rows
-        per live file; only those files are rewritten. Under a per-table
-        lock, new files are staged in a hidden directory, moved in and
-        published by atomically replacing the manifest. Files a commit
+        Column), then append ``add``: a DataFrame, or a list of Python
+        rows in table column order, which is append-only. One probe query
+        counts dropped rows per live file; only those files are
+        rewritten. Under a per-table lock, new files are staged, moved in
+        and published by atomically replacing the manifest. In a
+        _NUMBERED table ``add`` numbers its ids from 0: the commit offsets
+        them by the manifest's ``next_id`` and advances it by the rows
+        added, counted from the new files' footers. Files a commit
         unpublishes are deleted by the next one, so a reader holding the
         previous file list keeps working. Returns the rows dropped."""
+        if isinstance(add, list) and drop is not None:
+            raise ValueError("Python rows are append-only")
         root = self._path(name)
         os.makedirs(root, exist_ok=True)
         with open(os.path.join(root, "_lock"), "a") as lock:
@@ -163,40 +184,60 @@ class HiveEngine:
                 hits = dict(doomed.groupBy("_file").count().collect())
             if add is None and not hits:
                 return 0
+            if name in _NUMBERED and add is not None:
+                add = _offset_ids(add, cur["next_id"])
             gone = [f for f in cur["files"] if os.path.basename(f) in hits]
-            parts = [] if add is None else [add]
             # a file that loses only some rows is rewritten without them
-            partial = [
-                f for f in gone
-                if pq.read_metadata(os.path.join(root, f)).num_rows
-                > hits[os.path.basename(f)]
-            ]
-            if partial:
-                kept = self._scan(name, partial)
-                parts.append(
-                    kept.join(add.select(*drop), drop, "left_anti") if by_key
-                    else kept.filter(~drop)
-                )
-            files = [f for f in cur["files"] if f not in gone]
-            if parts:
+            kept_rows = {
+                f: n - hits[os.path.basename(f)]
+                for f in gone
+                if (n := _num_rows(root, f)) > hits[os.path.basename(f)]
+            }
+            if isinstance(add, list):  # append-only: nothing to rewrite
+                out = add
+            else:
+                parts = [] if add is None else [add]
+                if kept_rows:
+                    kept = self._scan(name, list(kept_rows))
+                    parts.append(
+                        kept.join(add.select(*drop), drop, "left_anti") if by_key
+                        else kept.filter(~drop)
+                    )
                 cols = _TABLE_SCHEMAS[name].fieldNames()
-                out = reduce(DataFrame.unionByName, [p.select(*cols) for p in parts])
-                files += self._stage_and_move(name, version, out)
+                out = reduce(
+                    DataFrame.unionByName, [p.select(*cols) for p in parts]
+                ) if parts else None
+            new = [] if out is None else self._stage_and_move(name, version, out)
+            state = {
+                "version": version,
+                "files": [f for f in cur["files"] if f not in gone] + new,
+                "unpublished": gone,
+            }
+            if name in _NUMBERED:
+                added = sum(_num_rows(root, f) for f in new) - sum(kept_rows.values())
+                state["next_id"] = cur["next_id"] + added
             tmp = os.path.join(root, _MANIFEST + ".tmp")
             with open(tmp, "w") as fh:
-                json.dump({"version": version, "files": files, "unpublished": gone}, fh)
+                json.dump(state, fh)
             os.replace(tmp, os.path.join(root, _MANIFEST))
             for f in cur["unpublished"]:
                 os.remove(os.path.join(root, f))
         return sum(hits.values())
 
-    def _stage_and_move(self, name: str, version: int, df: DataFrame) -> list[str]:
-        """Write ``df`` to a hidden staging directory in the table, move
-        its parquet files in under names unique to this commit and
-        return their relative paths."""
+    def _stage_and_move(
+        self, name: str, version: int, out: DataFrame | list[tuple]
+    ) -> list[str]:
+        """Write ``out`` into the table under names unique to this commit
+        and return their relative paths. Python rows are written by
+        pyarrow straight into the partition directory Spark would have
+        chosen; no reader sees them until the manifest names them. A
+        DataFrame is written by Spark to a hidden staging directory and
+        its files are moved in."""
+        if isinstance(out, list):
+            return self._write_rows(name, version, out)
         root = self._path(name)
         stage = os.path.join(root, f"_stage-{version}")
-        writer = df.write.mode("overwrite")
+        writer = out.write.mode("overwrite")
         if name in _ORG_PARTITIONED:
             writer = writer.partitionBy("organization_id")
         writer.parquet(stage)
@@ -215,7 +256,40 @@ class HiveEngine:
             os.rmdir(dirpath)
         return moved
 
-    def _append(self, name: str, df: DataFrame) -> None:
+    def _write_rows(self, name: str, version: int, rows: list[tuple]) -> list[str]:
+        """One parquet file per partition of ``rows``, laid out and typed
+        as Spark writes them: the partition column lives in the directory
+        name, naive timestamps are local time, and the file carries no
+        embedded Arrow schema (``store_schema=False``) to stay small."""
+        schema = _TABLE_SCHEMAS[name]
+        arrow = to_arrow_schema(schema)
+        org = (
+            schema.fieldNames().index("organization_id")
+            if name in _ORG_PARTITIONED else None
+        )
+        cols = [j for j in range(len(schema.fields)) if j != org]
+        groups: dict[str, list[tuple]] = {}
+        for r in rows:
+            groups.setdefault("" if org is None else _partition_dir(r[org]), []).append(r)
+        ts = {j for j in cols if isinstance(schema.fields[j].dataType, TimestampType)}
+        file_schema = pa.schema([arrow.field(j) for j in cols])
+        root, moved = self._path(name), []
+        for sub, group in groups.items():
+            table = pa.Table.from_arrays([
+                pa.array(
+                    [r[j] and r[j].astimezone(timezone.utc) if j in ts else r[j]
+                     for r in group],
+                    arrow.field(j).type,
+                )
+                for j in cols
+            ], schema=file_schema)
+            rel = os.path.join(sub, f"part-{version:05d}-{len(moved):05d}.parquet")
+            os.makedirs(os.path.join(root, sub), exist_ok=True)
+            pq.write_table(table, os.path.join(root, rel), store_schema=False)
+            moved.append(rel)
+        return moved
+
+    def _append(self, name: str, df: DataFrame | list[tuple]) -> None:
         self._commit(name, df)
 
     def _replace(self, name: str, df: DataFrame) -> None:
@@ -323,14 +397,12 @@ class HiveEngine:
             fresh.select(F.col("path").alias("document_id"), "ingest_type"),
             "document_id",
         )
-        base = self._next_id("events")
         # ingest batches can be a bulk backfill — ids via the scalable
-        # range-partitioned numbering, not a single-partition window
+        # range-partitioned numbering, not a single-partition window;
+        # numbered from 0, the commit offsets them
         from the_hive_spark.functions.ids import dense_sequential_ids
 
-        events = dense_sequential_ids(
-            tallies, "document_id", base=base
-        ).select(
+        events = dense_sequential_ids(tallies, "document_id", base=0).select(
             F.col("id"),
             now.alias("timestamp"),
             F.col("ingest_type").alias("event_type"),
@@ -440,7 +512,8 @@ class HiveEngine:
 
         When ``session_id`` is given, the exchange persists to
         chat_sessions / chat_messages (ChatStore semantics inferred
-        from chat_handler.go:152-196)."""
+        from chat_handler.go:152-196). Retrieval then runs once: the
+        returned DataFrame holds the row that was stored."""
         hits = self.search(
             query, top_k=top_k, organization_id=organization_id, audit=False
         )
@@ -464,35 +537,37 @@ class HiveEngine:
                 F.col("context"),
             ),
         )
-        if session_id is not None:
-            self._persist_chat(query, result, session_id, user_id,
-                               organization_id or "")
-        return result
-
-    def _persist_chat(self, query, result, session_id, user_id, org) -> None:
-        existing = self.read_table("chat_sessions").filter(
-            F.col("session_id") == session_id
-        )
-        if existing.isEmpty():
-            title = query[:50]
-            sess = self.spark.createDataFrame(
-                [(session_id, user_id, org, title, None)], schemas.CHAT_SESSIONS
-            ).withColumn("created_at", F.current_timestamp())
-            self._append("chat_sessions", sess)
-        prev = self.read_table("chat_messages").filter(
-            F.col("session_id") == session_id
-        )
-        base = (prev.agg(F.max("message_index")).collect()[0][0] or -1) + 1
+        if session_id is None:
+            return result
         row = result.collect()[0]  # single aggregate row by construction
-        msgs = self.spark.createDataFrame(
-            [
-                (session_id, base, "user", query, [], None),
-                (session_id, base + 1, "assistant", row["answer"],
-                 [tuple(c) for c in row["citations"]], None),
-            ],
-            schemas.CHAT_MESSAGES,
-        ).withColumn("created_at", F.current_timestamp())
-        self._append("chat_messages", msgs)
+        self._persist_chat(query, row, session_id, user_id, organization_id or "")
+        # an Arrow table becomes a local relation: collecting it runs no job
+        return self.spark.createDataFrame(pa.Table.from_pylist(
+            [row.asDict(recursive=True)], schema=to_arrow_schema(result.schema)
+        ))
+
+    def _persist_chat(self, query, row, session_id, user_id, org) -> None:
+        mine = F.col("session_id") == session_id
+        # one scan-only lookup (a global max would add a shuffle job): a
+        # null for the session's row, then each message_index
+        seen = [
+            r.m for r in
+            self.read_table("chat_sessions").filter(mine)
+            .select(F.lit(None).cast("int").alias("m"))
+            .unionByName(
+                self.read_table("chat_messages").filter(mine)
+                .select(F.col("message_index").alias("m"))
+            )
+            .collect()
+        ]
+        now = datetime.now(timezone.utc)
+        if None not in seen:
+            self._append("chat_sessions", [(session_id, user_id, org, query[:50], now)])
+        base = 1 + max((m for m in seen if m is not None), default=-1)
+        self._append("chat_messages", [
+            (session_id, base, "user", query, [], now),
+            (session_id, base + 1, "assistant", row["answer"], row["citations"], now),
+        ])
 
     def chat_history(self, session_id: str) -> DataFrame:
         return (
@@ -1280,31 +1355,31 @@ class HiveEngine:
         self._commit(name, rows, where)
 
     def _next_id(self, name: str) -> int:
-        t = self.read_table(name)
-        row = t.agg(F.max("id").alias("m")).collect()[0]
-        return (row["m"] or 0) + 1
+        """The id the next commit to a _NUMBERED table starts at."""
+        return self._manifest(name)["next_id"]
 
-    def _audit(self, rows: DataFrame) -> None:
-        base = self._next_id("audit_logs")
-        out = rows.select(
-            (F.lit(base) + F.row_number().over(_order_all("details")) - 1).alias("id"),
-            F.current_timestamp().alias("timestamp"),
-            "client_ip",
-            "action",
-            "details",
-            "organization_id",
-        )
+    def _audit(self, rows: DataFrame | list[tuple]) -> None:
+        """Append (client_ip, action, details, organization_id) rows,
+        numbered from 0 in ``details`` order (DataFrame) or list order;
+        the commit offsets the ids."""
+        if isinstance(rows, DataFrame):
+            out = rows.select(
+                (F.row_number().over(_order_all("details")) - 1).alias("id"),
+                F.current_timestamp().alias("timestamp"),
+                "client_ip",
+                "action",
+                "details",
+                "organization_id",
+            )
+        else:
+            now = datetime.now(timezone.utc)
+            out = [(i, now, *r) for i, r in enumerate(rows)]
         self._append("audit_logs", out)
 
     def _audit_row(
         self, client_ip: str, action: str, details: str, organization_id: str
     ) -> None:
-        self._audit(
-            self.spark.createDataFrame(
-                [(client_ip, action, details, organization_id)],
-                "client_ip string, action string, details string, organization_id string",
-            )
-        )
+        self._audit([(client_ip, action, details, organization_id)])
 
 
 def _restrict_to_ids(
@@ -1331,10 +1406,32 @@ def _restrict_to_ids(
     return df.filter(F.col(col).isin(ids))
 
 
+def _num_rows(root: str, rel: str) -> int:
+    return pq.read_metadata(os.path.join(root, rel)).num_rows
+
+
+def _offset_ids(add: DataFrame | list[tuple], base: int) -> DataFrame | list[tuple]:
+    """``add`` with its 0-based ``id`` column shifted to start at ``base``
+    ("id" is the first column of every _NUMBERED table)."""
+    if isinstance(add, DataFrame):
+        return add.withColumn("id", F.col("id").cast("long") + base)
+    return [(r[0] + base, *r[1:]) for r in add]
+
+
+def _partition_dir(value: str | None) -> str:
+    """The directory Spark writes an ``organization_id`` value to: null
+    and "" share the default partition, other values are escaped."""
+    if not value:
+        return "organization_id=__HIVE_DEFAULT_PARTITION__"
+    return "organization_id=" + "".join(
+        f"%{ord(c):02X}" if c in _PATH_ESCAPED else c for c in value
+    )
+
+
 def _order_all(col: str):
     """Single-partition ordering window — ONLY for inputs that are
-    bounded by construction (single audit rows, trigger-bounded
-    micro-batches). Bulk paths use functions.ids.dense_sequential_ids
+    bounded by construction (one ingest batch's audit rows,
+    trigger-bounded micro-batches). Bulk paths use functions.ids.dense_sequential_ids
     instead, which numbers rows without a single-partition stage."""
     from pyspark.sql import Window
 

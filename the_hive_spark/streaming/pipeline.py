@@ -37,8 +37,8 @@ def analyze_batch(engine: HiveEngine, completed: DataFrame) -> None:
         if completed.isEmpty():
             return
 
-        # completion events (events.go:36-62)
-        base = engine._next_id("events")
+        # completion events (events.go:36-62), numbered from 0; the
+        # commit offsets them by the table's next id
         events = dense_sequential_ids(
             completed.select(
                 F.col("document_id"),
@@ -46,7 +46,7 @@ def analyze_batch(engine: HiveEngine, completed: DataFrame) -> None:
                 F.col("completion_reason"),
             ),
             "document_id",
-            base=base,
+            base=0,
             id_col="id",
         ).select(
             "id",
