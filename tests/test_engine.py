@@ -155,6 +155,77 @@ def test_tenant_purge(spark, tmp_path_factory):
     # org-scoped search only sees its tenant (P2 filter-then-rank)
     hits = eng.search("tenant b content", top_k=5, organization_id="orgB").collect()
     assert all(h["organization_id"] == "orgB" for h in hits)
+    # the purge took orgA's documents, change-detection state included,
+    # so the same files ingest again and are searchable again
+    assert eng.ingest_batch(seed_files(spark, org="orgA"))["files"] > 0
+    for phrase, expected_doc in GOLDEN_QUERIES.items():
+        top = eng.search(phrase, top_k=1, organization_id="orgA").collect()
+        assert [h["document_id"] for h in top] == [f"/watch/{expected_doc}"], phrase
+
+
+def test_ingest_batch_releases_its_caches(spark, tmp_path):
+    """A full batch and one that returns early (nothing new) both leave
+    the session's persisted RDDs as they found them."""
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persisted()
+    assert eng.ingest_batch(seed_files(spark))["files"] == 5
+    assert persisted() == before
+    assert eng.ingest_batch(seed_files(spark))["files"] == 0
+    assert persisted() == before
+
+
+def test_failed_ingest_is_reingested_on_replay(spark, tmp_path, monkeypatch):
+    """The document row, which carries the file's hash, commits after
+    every artifact derived from the file. A batch that fails part-way
+    (here: the chunks commit raises once) has recorded no hash, so a
+    replay of the same input ingests the files and their chunks."""
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+    upsert = eng._upsert
+    failed = []
+
+    def fail_chunks_once(name, new, key_cols):
+        if name == "chunks" and not failed:
+            failed.append(name)
+            raise OSError("disk full")
+        upsert(name, new, key_cols)
+
+    monkeypatch.setattr(eng, "_upsert", fail_chunks_once)
+    with pytest.raises(OSError):
+        eng.ingest_batch(seed_files(spark))
+    assert eng.read_table("documents").count() == 0
+
+    stats = eng.ingest_batch(seed_files(spark))
+    assert stats["files"] == 5
+    chunks = eng.read_table("chunks")
+    assert chunks.count() == stats["chunks"] > 0
+    docs = {r["id"] for r in eng.read_table("documents").collect()}
+    assert {r["document_id"] for r in chunks.collect()} == docs
+    assert len(docs) == 5
+
+
+def test_commit_with_no_rows_publishes_nothing(spark, tmp_path):
+    """A commit whose add holds no rows and drops none leaves the table's
+    manifest as it was: no version bump, no 0-row file."""
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+    eng.ingest_batch(seed_files(spark))
+    eng.add_rule(1, "flag confidential material")
+    assert eng.evaluate_rules().count() > 0
+    eng.generate_api_key("drone-1")
+    before = {t: eng._manifest(t) for t in ("rule_matches", "api_keys")}
+    assert before["rule_matches"]["version"] == 1
+    assert before["api_keys"]["version"] == 1
+
+    assert eng.evaluate_rules(["/watch/no-such-doc"]).count() == 0
+    eng.touch_api_key("hive_no_such_key")
+    for t, manifest in before.items():
+        after = eng._manifest(t)
+        assert (after["version"], after["files"]) == (
+            manifest["version"], manifest["files"]
+        ), t
 
 
 def test_update_event_on_changed_file(spark, tmp_path):

@@ -73,9 +73,17 @@ def test_watch_ingests_backlog_then_increment(spark, dirs):
     docs = {r["filename"] for r in eng.read_table("documents").collect()}
     assert docs == set(list(SEED_DOCS)[:3])
 
+    def rows_read(query):
+        return sum(p["numInputRows"] for p in query.recentProgress)
+
+    # each trigger reads its source once: one row per landed file, less
+    # empty.md, which the pushed-down length filter skips in the source
+    assert rows_read(q) == 5
+
     _write(dirs["watch"], "delta_research.md", SEED_DOCS["delta_research.md"])
     q2 = watch(eng, dirs["watch"], dirs["checkpoint"])
     q2.awaitTermination(120)
+    assert rows_read(q2) == 1
     docs2 = {r["filename"] for r in eng.read_table("documents").collect()}
     assert docs2 == set(list(SEED_DOCS)[:3]) | {"delta_research.md"}
     # re-run with nothing new: chunk count stable (ST2 + checkpoint)

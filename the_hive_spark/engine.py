@@ -6,9 +6,11 @@ analytics, stats and purge.
 
 No client/server split: the drone→gRPC→server pipeline (SURVEY.md
 §3.2) collapses into ``ingest_batch`` (and streaming/watch.py wraps it
-in Structured Streaming). External-service boundaries (embedding
-provider, LLM) are mockable pandas UDFs; everything else is built-in
-DataFrame ops.
+in Structured Streaming). The drone's change-detection state (a
+SHA-256 per path, client_db.go:69-79) therefore lives on the document
+row itself, as ``documents.metadata["file_hash"]``. External-service
+boundaries (embedding provider, LLM) are mockable pandas UDFs;
+everything else is built-in DataFrame ops.
 
 Scale notes: tenant tables partition by organization_id (partition
 pruning = tenancy, SURVEY.md §1.3). Every table write is one
@@ -74,7 +76,6 @@ _TABLE_SCHEMAS = {
     "audit_logs": schemas.AUDIT_LOGS,
     "rules": schemas.RULES,
     "api_keys": schemas.API_KEYS,
-    "tracked_files": schemas.TRACKED_FILES,
     "alerts": schemas.ALERTS,
     "rule_matches": schemas.RULE_MATCHES,
     "chat_sessions": schemas.CHAT_SESSIONS,
@@ -161,7 +162,9 @@ class HiveEngine:
         them by the manifest's ``next_id`` and advances it by the rows
         added, counted from the new files' footers. Files a commit
         unpublishes are deleted by the next one, so a reader holding the
-        previous file list keeps working. Returns the rows dropped."""
+        previous file list keeps working. Staged files with no rows are
+        not published, and a commit that then adds and drops nothing
+        leaves the manifest as it was. Returns the rows dropped."""
         if isinstance(add, list) and drop is not None:
             raise ValueError("Python rows are append-only")
         root = self._path(name)
@@ -182,8 +185,6 @@ class HiveEngine:
                     else live.filter(drop)
                 )
                 hits = dict(doomed.groupBy("_file").count().collect())
-            if add is None and not hits:
-                return 0
             if name in _NUMBERED and add is not None:
                 add = _offset_ids(add, cur["next_id"])
             gone = [f for f in cur["files"] if os.path.basename(f) in hits]
@@ -208,6 +209,8 @@ class HiveEngine:
                     DataFrame.unionByName, [p.select(*cols) for p in parts]
                 ) if parts else None
             new = [] if out is None else self._stage_and_move(name, version, out)
+            if not new and not gone:  # nothing to publish
+                return 0
             state = {
                 "version": version,
                 "files": [f for f in cur["files"] if f not in gone] + new,
@@ -245,7 +248,7 @@ class HiveEngine:
         for dirpath, _, names in os.walk(stage, topdown=False):
             sub = os.path.relpath(dirpath, stage)
             for n in names:
-                if n.endswith(".parquet"):
+                if n.endswith(".parquet") and _num_rows(dirpath, n):
                     new = f"part-{version:05d}-{len(moved):05d}.parquet"
                     rel = os.path.normpath(os.path.join(sub, new))
                     os.makedirs(os.path.join(root, sub), exist_ok=True)
@@ -308,39 +311,37 @@ class HiveEngine:
         Returns per-stage row counts (A3 ingest tally).
         """
         now = F.current_timestamp()
-        files = files.withColumn("file_hash", sha256_hex(F.col("content")))
-
-        # ST2 change detection (decision.go:43-98): same (path, hash) ⇒
-        # skip; known path + new hash ⇒ update; unknown path ⇒ new
-        tracked = self.read_table("tracked_files").select(
-            F.col("file_path").alias("path"), F.col("file_hash")
+        files = files.withColumn("file_hash", sha256_hex(F.col("content"))).withColumn(
+            "metadata",
+            F.map_concat(
+                F.coalesce(
+                    F.col("metadata"),
+                    F.expr("cast(map() as map<string,string>)"),
+                ),
+                F.create_map(F.lit("file_hash"), F.col("file_hash")),
+            ),
         )
-        known_paths = tracked.select("path").distinct().withColumn(
-            "_known", F.lit(True)
+
+        # ST2 change detection (decision.go:43-98) against the hash each
+        # document keeps in metadata["file_hash"]: unknown path ⇒ new;
+        # known path + new hash ⇒ update; same hash ⇒ skip
+        known = self.read_table("documents").select(
+            F.col("id").alias("path"),
+            F.lit(True).alias("_known"),
+            F.col("metadata")["file_hash"].alias("_hash"),
         )
         fresh = (
-            files.join(tracked, ["path", "file_hash"], "left_anti")
-            .join(known_paths, ["path"], "left")
+            files.join(known, "path", "left")
+            .filter(
+                F.col("_known").isNull() | ~F.col("_hash").eqNullSafe(F.col("file_hash"))
+            )
             .withColumn(
                 "ingest_type",
                 F.when(F.col("_known"), F.lit("update")).otherwise(F.lit("ingest")),
             )
-            .drop("_known")
+            .drop("_known", "_hash")
             .cache()
         )
-        n_fresh = fresh.count()
-        if n_fresh == 0:
-            return {"files": 0, "chunks": 0, "alerts": 0}
-
-        # documents upsert (doc id = path, as ingest_handler.go:92-95)
-        docs = fresh.select(
-            F.col("path").alias("id"),
-            F.element_at(F.split("path", "/"), -1).alias("filename"),
-            now.alias("uploaded_at"),
-            "metadata",
-            "organization_id",
-        )
-        self._upsert("documents", docs, ["id"])
 
         # chunk (F2 sentence-aware server path) → deterministic ids (F3)
         chunks = (
@@ -350,7 +351,6 @@ class HiveEngine:
                 F.posexplode("_chunks").alias("chunk_index", "content"),
                 "organization_id",
                 "metadata",
-                "file_hash",
             )
             .withColumn(
                 "id", uuid5_chunk_id(F.col("document_id"), F.col("chunk_index"))
@@ -376,83 +376,83 @@ class HiveEngine:
             now.alias("created_at"),
             F.coalesce(F.col("organization_id"), F.lit("")).alias("organization_id"),
             self._embed(F.col("content")).alias("embedding"),
-            F.map_concat(
-                F.coalesce(
-                    F.col("metadata"),
-                    F.expr("cast(map() as map<string,string>)"),
-                ),
-                F.create_map(F.lit("file_hash"), F.col("file_hash")),
-            ).alias("metadata"),
+            "metadata",
             F.slice(tag_arr, 1, 5).alias("tags"),
-        ).cache()
-        n_chunks = chunk_rows.count()
-        # keyed by document: an update drops every old chunk of the doc
-        self._upsert("chunks", chunk_rows, ["document_id"])
-
-        # events: one ingest|update event per document (events.go:36-62;
-        # the type reflects the ST2 new-vs-changed decision)
-        tallies = chunk_rows.groupBy("document_id").agg(
-            F.count(F.lit(1)).alias("n")
-        ).join(
-            fresh.select(F.col("path").alias("document_id"), "ingest_type"),
-            "document_id",
         )
-        # ingest batches can be a bulk backfill — ids via the scalable
-        # range-partitioned numbering, not a single-partition window;
-        # numbered from 0, the commit offsets them
-        from the_hive_spark.functions.ids import dense_sequential_ids
-
-        events = dense_sequential_ids(tallies, "document_id", base=0).select(
-            F.col("id"),
-            now.alias("timestamp"),
-            F.col("ingest_type").alias("event_type"),
-            F.col("document_id").alias("document_name"),
-            F.format_string("Ingested %d chunks", F.col("n")).alias("details"),
-        )
-        self._append("events", events)
-
         # P7 alert: keyword on chunk 0 (hive_service.go:222-246)
-        alerts = (
-            chunk_rows.filter(
-                (F.col("chunk_index") == 0)
-                & (F.instr(F.upper("content"), ALERT_KEYWORD) > 0)
+        is_alert = (F.col("chunk_index") == 0) & (
+            F.instr(F.upper("content"), ALERT_KEYWORD) > 0
+        )
+        try:
+            n_fresh = fresh.count()
+            if n_fresh == 0:
+                return {"files": 0, "chunks": 0, "alerts": 0}
+
+            n_chunks, n_alerts = chunk_rows.cache().agg(
+                F.count(F.lit(1)), F.count_if(is_alert)
+            ).first()
+            # keyed by document: an update drops every old chunk of the doc
+            self._upsert("chunks", chunk_rows, ["document_id"])
+
+            # events: one ingest|update event per document (events.go:36-62;
+            # the type reflects the ST2 new-vs-changed decision)
+            tallies = chunk_rows.groupBy("document_id").agg(
+                F.count(F.lit(1)).alias("n")
+            ).join(
+                fresh.select(F.col("path").alias("document_id"), "ingest_type"),
+                "document_id",
             )
-            .select(
+            # numbered from 0 in document order over one window, as the
+            # batch's audit rows are; the commit offsets them
+            events = tallies.select(
+                (F.row_number().over(_order_all("document_id")) - 1).alias("id"),
                 now.alias("timestamp"),
-                F.lit("ALERT").alias("alert_type"),
-                F.format_string(
-                    "Document %s contains %s content", "document_id", F.lit(ALERT_KEYWORD)
-                ).alias("message"),
-                F.lit("warning").alias("level"),
-                F.col("document_id").alias("document_id"),
+                F.col("ingest_type").alias("event_type"),
+                F.col("document_id").alias("document_name"),
+                F.format_string("Ingested %d chunks", F.col("n")).alias("details"),
+            )
+            self._append("events", events)
+
+            if n_alerts:
+                self._append("alerts", chunk_rows.filter(is_alert).select(
+                    now.alias("timestamp"),
+                    F.lit("ALERT").alias("alert_type"),
+                    F.format_string(
+                        "Document %s contains %s content",
+                        "document_id", F.lit(ALERT_KEYWORD),
+                    ).alias("message"),
+                    F.lit("warning").alias("level"),
+                    F.col("document_id").alias("document_id"),
+                    "organization_id",
+                ))
+
+            # audit INGEST rows (audit_log.go:46-58)
+            self._audit(
+                fresh.select(
+                    F.lit("ingest").alias("client_ip"),
+                    F.lit("INGEST").alias("action"),
+                    F.format_string("Client ingested file [%s]", "path").alias("details"),
+                    F.coalesce("organization_id", F.lit("")).alias("organization_id"),
+                )
+            )
+
+            # documents upsert (doc id = path, as ingest_handler.go:92-95)
+            # commits last: it records the file's hash, so a batch that
+            # fails before here is re-ingested when it is replayed
+            docs = fresh.select(
+                F.col("path").alias("id"),
+                F.element_at(F.split("path", "/"), -1).alias("filename"),
+                now.alias("uploaded_at"),
+                "metadata",
                 "organization_id",
             )
-            .cache()
-        )
-        n_alerts = alerts.count()
-        if n_alerts:
-            self._append("alerts", alerts)
-
-        # audit INGEST rows (audit_log.go:46-58)
-        self._audit(
-            fresh.select(
-                F.lit("ingest").alias("client_ip"),
-                F.lit("INGEST").alias("action"),
-                F.format_string("Client ingested file [%s]", "path").alias("details"),
-                F.coalesce("organization_id", F.lit("")).alias("organization_id"),
-            )
-        )
-
-        # tracked_files upsert (ST2 state)
-        tf = fresh.select(
-            F.col("path").alias("file_path"),
-            "file_hash",
-            now.alias("last_processed"),
-            F.lit("success").alias("server_status"),
-        )
-        self._upsert("tracked_files", tf, ["file_path"])
-
-        return {"files": n_fresh, "chunks": n_chunks, "alerts": n_alerts}
+            self._upsert("documents", docs, ["id"])
+            return {"files": n_fresh, "chunks": n_chunks, "alerts": n_alerts}
+        finally:
+            # release both caches, early return included: the cache
+            # manager holds them for the life of the session otherwise
+            chunk_rows.unpersist()
+            fresh.unpersist()
 
     # -------------------------------------------------------------- search
 
@@ -1312,10 +1312,10 @@ class HiveEngine:
     def forget_document(self, document_id: str) -> dict[str, int]:
         """Right-to-erasure at document granularity (the GDPR-shaped
         complement of the tenant-level purge): remove the document and
-        every derived artifact keyed to it — chunks, tracked-file
-        entry, alerts, rule matches, graph edges — and leave an audit
-        row recording the erasure (the one trace that legally should
-        remain). Returns per-table deleted-row counts.
+        every derived artifact keyed to it — chunks, alerts, rule
+        matches, graph edges — and leave an audit row recording the
+        erasure (the one trace that legally should remain). Returns
+        per-table deleted-row counts.
 
         Each table is one predicate commit: its probe counts the rows
         to delete, and only the files holding them are rewritten.
@@ -1323,7 +1323,6 @@ class HiveEngine:
         preds = {
             "documents": F.col("id") == document_id,
             "chunks": F.col("document_id") == document_id,
-            "tracked_files": F.col("file_path") == document_id,
             "alerts": F.col("document_id") == document_id,
             "rule_matches": (F.col("uploaded_doc") == document_id)
             | (F.col("matched_doc") == document_id),
@@ -1429,9 +1428,9 @@ def _partition_dir(value: str | None) -> str:
 
 
 def _order_all(col: str):
-    """Single-partition ordering window — ONLY for inputs that are
-    bounded by construction (one ingest batch's audit rows,
-    trigger-bounded micro-batches). Bulk paths use functions.ids.dense_sequential_ids
+    """Single-partition ordering window — ONLY for inputs of one row per
+    file or document of a batch (an ingest batch's events and audit
+    rows, trigger-bounded micro-batches). Bulk paths use functions.ids.dense_sequential_ids
     instead, which numbers rows without a single-partition stage."""
     from pyspark.sql import Window
 

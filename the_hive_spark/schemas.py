@@ -102,15 +102,6 @@ API_KEYS = StructType(
     ]
 )
 
-TRACKED_FILES = StructType(
-    [
-        StructField("file_path", StringType(), False),
-        StructField("file_hash", StringType(), True),
-        StructField("last_processed", TimestampType(), True),
-        StructField("server_status", StringType(), True),
-    ]
-)
-
 ALERTS = StructType(
     [
         StructField("timestamp", TimestampType(), True),

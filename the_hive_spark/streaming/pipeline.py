@@ -27,10 +27,11 @@ def analyze_batch(engine: HiveEngine, completed: DataFrame) -> None:
     path, S1) ONE batch is the entire backlog. So nothing here may be
     proportional-to-batch-size on the driver: document ids stay in
     DataFrames (semi-joined downstream, never ``collect()``-ed into an
-    ``isin`` literal) and event ids come from
-    :func:`~the_hive_spark.functions.ids.dense_sequential_ids` (range-
-    partitioned two-pass numbering) instead of a ``row_number`` over an
-    unpartitioned window.
+    ``isin`` literal). The events numbered here are one row per
+    completed document, the same bound as ``ingest_batch``'s events and
+    audit rows (one per file), which a ``row_number`` over one window
+    numbers; here :func:`~the_hive_spark.functions.ids.dense_sequential_ids`
+    numbers them without that single-partition stage.
     """
     completed = completed.cache()
     try:
@@ -72,8 +73,8 @@ def analyze_batch(engine: HiveEngine, completed: DataFrame) -> None:
             F.col("document_id").alias("document_id"),
             F.lit("").alias("organization_id"),
         )
-        if not alerts.isEmpty():
-            engine._append("alerts", alerts)
+        # a commit publishes nothing when the batch raised no alert
+        engine._append("alerts", alerts)
 
         # standing rules against the completed docs (J3 single-doc mode;
         # chunks were upserted by the ingest leg of the pipeline) —

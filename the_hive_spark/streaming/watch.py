@@ -80,10 +80,9 @@ def watch(
     )
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = batch_df.filter(F.col("content").isNotNull())
-        if batch_df.isEmpty():
-            return
-        engine.ingest_batch(batch_df)
+        # no emptiness probe: it would read the source a second time, and
+        # ingest_batch returns early on a batch with nothing new
+        engine.ingest_batch(batch_df.filter(F.col("content").isNotNull()))
 
     writer = (
         files.writeStream.foreachBatch(process_batch)
