@@ -620,3 +620,150 @@ def test_chat_persists_exactly_what_it_returns(spark, tmp_path):
     history = eng.chat_history("s1").collect()
     assert [m["message_index"] for m in history] == [0, 1, 2, 3]
     assert eng.read_table("chat_sessions").count() == 1
+
+
+def test_mixed_batches_exact_rows(spark, tmp_path):
+    """Two ingest batches whose files hit the per-file edge cases, with
+    every derived row pinned: a whitespace-only document gets a document
+    row but no chunk and no event; a keyword that appears only after
+    chunk 0 raises no alert; a None organization is stored as "" in
+    chunks, alerts and audit rows (chunks and audit_logs write "" to
+    the default partition, which reads back as null); an update that
+    shrinks a multi-chunk document to one chunk replaces all its
+    chunks."""
+    import hashlib
+
+    from the_hive_spark.functions.chunkers import chunk_sentence_py
+
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+    long_v1 = " ".join(
+        f"Sentence {i} walks the walrus ledger line by line." for i in range(80)
+    )
+    late = " ".join(
+        f"Line {i} of the memo is harmless." for i in range(60)
+    ) + " The final line is CONFIDENTIAL."
+    texts = {
+        "/m/blank.md": ("  \n\t  ", "org1"),
+        "/m/late.md": (late, "org1"),
+        "/m/long.md": (long_v1, "org1"),
+        "/m/noorg.md": ("A CONFIDENTIAL memo for the board.", None),
+    }
+    assert len(chunk_sentence_py(long_v1)) > 1
+    assert "CONFIDENTIAL" not in chunk_sentence_py(late)[0]
+    assert "CONFIDENTIAL" in chunk_sentence_py(late)[-1]
+
+    def batch(rows):
+        return spark.createDataFrame(
+            [(p, t, o, {"filetype": p.rsplit(".", 1)[-1]}) for p, (t, o) in rows.items()],
+            INGEST_FILES,
+        )
+
+    first = eng.ingest_batch(batch(texts))
+    n_late, n_long = len(chunk_sentence_py(late)), len(chunk_sentence_py(long_v1))
+    assert first == {"files": 4, "chunks": n_late + n_long + 1, "alerts": 1}
+    second_rows = {
+        "/m/blank.md": texts["/m/blank.md"],  # unchanged: skipped
+        "/m/long.md": ("Now one short sentence.", "org1"),
+        "/m/new.txt": ("Fresh text arrives.", "org2"),
+    }
+    second = eng.ingest_batch(batch(second_rows))
+    assert second == {"files": 2, "chunks": 2, "alerts": 0}
+    texts.update(second_rows)
+
+    chunks = {
+        (r["document_id"], r["chunk_index"], r["content"], r["organization_id"])
+        for r in eng.read_table("chunks").collect()
+    }
+    assert chunks == {
+        (p, i, c, o)
+        for p, (t, o) in texts.items()
+        for i, c in enumerate(chunk_sentence_py(t))
+    }
+    assert len(chunks) == n_late + 3
+
+    events = [
+        (r["id"], r["event_type"], r["document_name"], r["details"])
+        for r in eng.read_table("events").orderBy("id").collect()
+    ]
+    assert events == [
+        (1, "ingest", "/m/late.md", f"Ingested {n_late} chunks"),
+        (2, "ingest", "/m/long.md", f"Ingested {n_long} chunks"),
+        (3, "ingest", "/m/noorg.md", "Ingested 1 chunks"),
+        (4, "update", "/m/long.md", "Ingested 1 chunks"),
+        (5, "ingest", "/m/new.txt", "Ingested 1 chunks"),
+    ]
+
+    alerts = [
+        (r["alert_type"], r["message"], r["level"], r["document_id"], r["organization_id"])
+        for r in eng.read_table("alerts").collect()
+    ]
+    assert alerts == [(
+        "ALERT", "Document /m/noorg.md contains CONFIDENTIAL content",
+        "warning", "/m/noorg.md", "",
+    )]
+
+    audit = [
+        (r["id"], r["client_ip"], r["action"], r["details"], r["organization_id"])
+        for r in eng.read_table("audit_logs").orderBy("id").collect()
+    ]
+    assert audit == [
+        (i, "ingest", "INGEST", f"Client ingested file [{p}]", o)
+        for i, (p, o) in enumerate([
+            ("/m/blank.md", "org1"), ("/m/late.md", "org1"),
+            ("/m/long.md", "org1"), ("/m/noorg.md", None),
+            ("/m/long.md", "org1"), ("/m/new.txt", "org2"),
+        ], start=1)
+    ]
+
+    docs = {
+        r["id"]: (r["filename"], r["organization_id"], r["metadata"])
+        for r in eng.read_table("documents").collect()
+    }
+    assert docs == {
+        p: (p.rsplit("/", 1)[-1], o, {
+            "filetype": p.rsplit(".", 1)[-1],
+            "file_hash": hashlib.sha256(t.encode()).hexdigest(),
+        })
+        for p, (t, o) in texts.items()
+    }
+
+
+def test_concurrent_ingest_of_the_same_new_files(spark, tmp_path, monkeypatch):
+    """Two threads ingest the same new files into one engine and meet
+    before the chunks commit, so each has classified every file as new.
+    The key-scoped commits still leave one row per document and per
+    chunk: the second chunks commit drops the first's rows by
+    document_id. A commit that skipped that probe for new files would
+    store both copies."""
+    import threading
+
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+    meet = threading.Barrier(2, timeout=300)
+    upsert = eng._upsert
+
+    def meet_before_chunks(name, new, key_cols):
+        if name == "chunks":
+            meet.wait()
+        upsert(name, new, key_cols)
+
+    monkeypatch.setattr(eng, "_upsert", meet_before_chunks)
+    results, errors = [], []
+
+    def ingest():
+        try:
+            results.append(eng.ingest_batch(seed_files(spark)))
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=ingest) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not errors, errors
+    assert [r["files"] for r in results] == [5, 5]
+    docs = eng.read_table("documents")
+    assert docs.count() == docs.select("id").distinct().count() == 5
+    chunks = eng.read_table("chunks")
+    n = results[0]["chunks"]
+    assert chunks.count() == chunks.select("id").distinct().count() == n > 0

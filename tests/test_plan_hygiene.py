@@ -187,6 +187,25 @@ def test_audit_append_launches_no_spark_job(spark, plan_engine):
     assert _jobs_in(spark, "next_id", lambda: plan_engine._next_id("audit_logs")) == 0
 
 
+def test_all_new_ingest_batch_job_count(spark, tmp_path):
+    """An all-new 5-file batch on a warm warehouse (one earlier batch)
+    runs at most 15 Spark jobs: one cached relation carries each file's
+    chunks, one aggregate over it gives every tally, and each commit
+    writes a projection of it. The batch ran 20 jobs when chunks were
+    cached a second time and counted per document by a join."""
+    import pyspark.sql.functions as F
+
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+    assert eng.ingest_batch(seed_files(spark))["files"] == 5
+    new = seed_files(spark).withColumn(
+        "path", F.regexp_replace("path", "^/watch/", "/warm/")
+    )
+    stats = {}
+    jobs = _jobs_in(spark, "ingest_all_new", lambda: stats.update(eng.ingest_batch(new)))
+    assert stats["files"] == 5
+    assert jobs <= 15, jobs
+
+
 def test_engine_contradiction_batch_path_broadcasts_batch(plan_engine):
     """contradiction_candidates(new_doc_ids=[...]): the small NEW
     batch broadcasts against one corpus pass — every broadcast subtree

@@ -1383,3 +1383,29 @@ def test_rate_limiter_snapshot_replay_idempotent(spark, tmp_path):
         tuple(r) for r in spark.read.parquet(lim._vdir(1)).collect()
     )
     assert replay_state == state_after, "replayed snapshot diverged"
+
+
+def test_analyze_batch_leaves_no_persisted_rdd(spark, tmp_path):
+    """analyze_batch leaves the session's persisted RDDs as it found
+    them: its cache is released and numbering the completion events
+    pins no checkpointed RDD. The events are still numbered densely in
+    document order."""
+    from the_hive_spark.streaming.pipeline import analyze_batch
+
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+    completed = spark.createDataFrame(
+        [(f"doc{i}", 1, "harmless text", "count") for i in (2, 0, 1)],
+        "document_id string, n_chunks long, full_text string, "
+        "completion_reason string",
+    )
+
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persisted()
+    analyze_batch(eng, completed)
+    assert persisted() == before
+    ev = eng.read_table("events").orderBy("id").collect()
+    assert [(r["id"], r["document_name"]) for r in ev] == [
+        (1, "doc0"), (2, "doc1"), (3, "doc2")
+    ]

@@ -330,100 +330,87 @@ class HiveEngine:
             F.lit(True).alias("_known"),
             F.col("metadata")["file_hash"].alias("_hash"),
         )
+        # the batch's one cached relation: each new or changed file with
+        # its chunks (F2 sentence-aware server path) in place of its text;
+        # every per-file row below is a projection of it
         fresh = (
             files.join(known, "path", "left")
             .filter(
                 F.col("_known").isNull() | ~F.col("_hash").eqNullSafe(F.col("file_hash"))
             )
-            .withColumn(
-                "ingest_type",
-                F.when(F.col("_known"), F.lit("update")).otherwise(F.lit("ingest")),
-            )
-            .drop("_known", "_hash")
-            .cache()
-        )
-
-        # chunk (F2 sentence-aware server path) → deterministic ids (F3)
-        chunks = (
-            fresh.withColumn("_chunks", chunk_sentence_udf(F.col("content")))
             .select(
-                F.col("path").alias("document_id"),
-                F.posexplode("_chunks").alias("chunk_index", "content"),
+                "path",
                 "organization_id",
                 "metadata",
+                F.when(F.col("_known"), F.lit("update")).otherwise(F.lit("ingest"))
+                .alias("ingest_type"),
+                chunk_sentence_udf(F.col("content")).alias("_chunks"),
             )
-            .withColumn(
-                "id", uuid5_chunk_id(F.col("document_id"), F.col("chunk_index"))
-            )
+            .cache()
         )
-
-        # embed (U1 mock provider) + fallback keyword tags (U5/U4)
-        tag_arr = F.array_compact(
-            F.array(
-                *[
-                    F.when(
-                        F.instr(F.lower("content"), kw) > 0, F.lit(f"#{kw}")
-                    )
-                    for kw in TAG_FALLBACK_KEYWORDS
-                ]
-            )
-        )
-        chunk_rows = chunks.select(
-            "id",
-            "document_id",
-            "content",
-            F.col("chunk_index").cast("int").alias("chunk_index"),
-            now.alias("created_at"),
-            F.coalesce(F.col("organization_id"), F.lit("")).alias("organization_id"),
-            self._embed(F.col("content")).alias("embedding"),
-            "metadata",
-            F.slice(tag_arr, 1, 5).alias("tags"),
-        )
-        # P7 alert: keyword on chunk 0 (hive_service.go:222-246)
-        is_alert = (F.col("chunk_index") == 0) & (
-            F.instr(F.upper("content"), ALERT_KEYWORD) > 0
-        )
+        doc_chunks = F.size("_chunks")
+        # P7 alert: keyword on chunk 0 (hive_service.go:222-246); a
+        # document without chunks has no chunk 0
+        is_alert = F.instr(
+            F.upper(F.try_element_at("_chunks", F.lit(1))), ALERT_KEYWORD
+        ) > 0
         try:
-            n_fresh = fresh.count()
+            n_fresh, n_chunks, n_alerts = fresh.agg(
+                F.count(F.lit(1)), F.sum(doc_chunks), F.count_if(is_alert)
+            ).first()
             if n_fresh == 0:
                 return {"files": 0, "chunks": 0, "alerts": 0}
 
-            n_chunks, n_alerts = chunk_rows.cache().agg(
-                F.count(F.lit(1)), F.count_if(is_alert)
-            ).first()
+            # deterministic ids (F3), embed (U1 mock provider) + fallback
+            # keyword tags (U5/U4). Not cached: the UDFs run once per
+            # chunk, inside the chunks commit's write
+            tags = F.array_compact(F.array(*[
+                F.when(F.instr(F.lower("content"), kw) > 0, F.lit(f"#{kw}"))
+                for kw in TAG_FALLBACK_KEYWORDS
+            ]))
+            chunk_rows = fresh.select(
+                F.col("path").alias("document_id"),
+                F.posexplode("_chunks").alias("chunk_index", "content"),
+                F.coalesce("organization_id", F.lit("")).alias("organization_id"),
+                "metadata",
+            ).select(
+                uuid5_chunk_id(F.col("document_id"), F.col("chunk_index")).alias("id"),
+                "document_id",
+                "content",
+                "chunk_index",
+                now.alias("created_at"),
+                "organization_id",
+                self._embed(F.col("content")).alias("embedding"),
+                "metadata",
+                F.slice(tags, 1, 5).alias("tags"),
+            )
             # keyed by document: an update drops every old chunk of the doc
             self._upsert("chunks", chunk_rows, ["document_id"])
 
-            # events: one ingest|update event per document (events.go:36-62;
-            # the type reflects the ST2 new-vs-changed decision)
-            tallies = chunk_rows.groupBy("document_id").agg(
-                F.count(F.lit(1)).alias("n")
-            ).join(
-                fresh.select(F.col("path").alias("document_id"), "ingest_type"),
-                "document_id",
-            )
-            # numbered from 0 in document order over one window, as the
-            # batch's audit rows are; the commit offsets them
-            events = tallies.select(
-                (F.row_number().over(_order_all("document_id")) - 1).alias("id"),
+            # events: one ingest|update event per document with chunks
+            # (events.go:36-62; the type reflects the ST2 new-vs-changed
+            # decision), numbered from 0 in document order over one
+            # window, as the batch's audit rows are; the commit offsets them
+            events = fresh.filter(doc_chunks > 0).select(
+                (F.row_number().over(_order_all("path")) - 1).alias("id"),
                 now.alias("timestamp"),
                 F.col("ingest_type").alias("event_type"),
-                F.col("document_id").alias("document_name"),
-                F.format_string("Ingested %d chunks", F.col("n")).alias("details"),
+                F.col("path").alias("document_name"),
+                F.format_string("Ingested %d chunks", doc_chunks).alias("details"),
             )
             self._append("events", events)
 
             if n_alerts:
-                self._append("alerts", chunk_rows.filter(is_alert).select(
+                self._append("alerts", fresh.filter(is_alert).select(
                     now.alias("timestamp"),
                     F.lit("ALERT").alias("alert_type"),
                     F.format_string(
                         "Document %s contains %s content",
-                        "document_id", F.lit(ALERT_KEYWORD),
+                        "path", F.lit(ALERT_KEYWORD),
                     ).alias("message"),
                     F.lit("warning").alias("level"),
-                    F.col("document_id").alias("document_id"),
-                    "organization_id",
+                    F.col("path").alias("document_id"),
+                    F.coalesce("organization_id", F.lit("")).alias("organization_id"),
                 ))
 
             # audit INGEST rows (audit_log.go:46-58)
@@ -449,9 +436,8 @@ class HiveEngine:
             self._upsert("documents", docs, ["id"])
             return {"files": n_fresh, "chunks": n_chunks, "alerts": n_alerts}
         finally:
-            # release both caches, early return included: the cache
-            # manager holds them for the life of the session otherwise
-            chunk_rows.unpersist()
+            # release the cache, early return included: the cache
+            # manager holds it for the life of the session otherwise
             fresh.unpersist()
 
     # -------------------------------------------------------------- search

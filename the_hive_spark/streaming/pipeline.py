@@ -14,8 +14,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from the_hive_spark.engine import ALERT_KEYWORD, HiveEngine
-from the_hive_spark.functions.ids import dense_sequential_ids
+from the_hive_spark.engine import ALERT_KEYWORD, HiveEngine, _order_all
 from the_hive_spark.streaming.completion import completed_documents
 
 
@@ -29,9 +28,8 @@ def analyze_batch(engine: HiveEngine, completed: DataFrame) -> None:
     DataFrames (semi-joined downstream, never ``collect()``-ed into an
     ``isin`` literal). The events numbered here are one row per
     completed document, the same bound as ``ingest_batch``'s events and
-    audit rows (one per file), which a ``row_number`` over one window
-    numbers; here :func:`~the_hive_spark.functions.ids.dense_sequential_ids`
-    numbers them without that single-partition stage.
+    audit rows (one per file), and the same ``row_number`` over one
+    window numbers them; it pins no checkpointed RDD.
     """
     completed = completed.cache()
     try:
@@ -40,17 +38,8 @@ def analyze_batch(engine: HiveEngine, completed: DataFrame) -> None:
 
         # completion events (events.go:36-62), numbered from 0; the
         # commit offsets them by the table's next id
-        events = dense_sequential_ids(
-            completed.select(
-                F.col("document_id"),
-                F.col("n_chunks"),
-                F.col("completion_reason"),
-            ),
-            "document_id",
-            base=0,
-            id_col="id",
-        ).select(
-            "id",
+        events = completed.select(
+            (F.row_number().over(_order_all("document_id")) - 1).alias("id"),
             F.current_timestamp().alias("timestamp"),
             F.lit("ingest").alias("event_type"),
             F.col("document_id").alias("document_name"),
