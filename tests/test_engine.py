@@ -767,3 +767,207 @@ def test_concurrent_ingest_of_the_same_new_files(spark, tmp_path, monkeypatch):
     chunks = eng.read_table("chunks")
     n = results[0]["chunks"]
     assert chunks.count() == chunks.select("id").distinct().count() == n > 0
+
+
+
+def _spark_ranking(eng, query, k, organization_id):
+    """The Spark plan search ran before the chunk index (scan, cosine,
+    TakeOrdered): the reference its rows must equal."""
+    from the_hive_spark.operators.similarity import cosine
+
+    chunks = eng.read_table("chunks")
+    if organization_id is not None:
+        chunks = chunks.filter(F.col("organization_id") == organization_id)
+    q = F.array(*[F.lit(float(x)) for x in eng._embed_query(query)])
+    return (
+        chunks.withColumn("_q", q)
+        .withColumn("score", cosine("embedding", "_q"))
+        .select(
+            F.col("id").alias("chunk_id"), "document_id", "content",
+            "chunk_index", "score", F.concat_ws(",", "tags").alias("tags_list"),
+            "organization_id",
+        )
+        .orderBy(F.desc("score"), F.asc("chunk_id"))
+        .limit(k)
+    )
+
+
+@pytest.fixture(scope="module")
+def index_engine(spark, tmp_path_factory):
+    """The seed corpus in org1; the same texts under other paths in orgB
+    (exact score ties between documents); one short document in orgC
+    (fewer chunks than k); one with no tenant (the default partition);
+    and a punctuation-only document, whose embedding is all zeros."""
+    eng = HiveEngine(spark, str(tmp_path_factory.mktemp("wh_index")), embedding_dim=32)
+    eng.ingest_batch(seed_files(spark))
+    eng.ingest_batch(seed_files(spark, org="orgB").withColumn(
+        "path", F.regexp_replace("path", "^/watch/", "/copy/")
+    ))
+    eng.ingest_batch(spark.createDataFrame([
+        ("/watch/c_doc.txt", "Tenant C keeps one short note.", "orgC", None),
+        ("/watch/shared.txt", "Nobody owns this quarterly report.", None, None),
+        ("/watch/punct.txt", "!!! ??? ---", "org1", None),
+    ], INGEST_FILES))
+    return eng
+
+
+def test_index_scores_equal_spark_cosine(index_engine):
+    """Every chunk's score equals the Spark cosine expression with ==,
+    and the ranked rows (ties, nulls, tenants, schema) equal the Spark
+    plan's, for queries with and without tokens in the vocabulary."""
+    eng = index_engine
+    n = eng.read_table("chunks").count()
+    queries = [*GOLDEN_QUERIES, "quarterly report", "", "!!!"]
+    for query in queries:
+        for org, k in ((None, n), ("org1", n), ("org1", 3), ("orgB", n),
+                       ("orgC", 5), ("nobody", 3)):
+            want = _spark_ranking(eng, query, k, org)
+            got = eng.search(query, top_k=k, organization_id=org, audit=False)
+            assert got.schema == want.schema
+            rows = got.collect()
+            assert rows == want.collect(), (query, org, k)
+            assert org is None or all(r["organization_id"] == org for r in rows)
+    full = eng.search("quarterly report", top_k=n, audit=False).collect()
+    assert len(full) == n
+    scores = [r["score"] for r in full if r["score"] is not None]
+    assert len(scores) > len(set(scores)), "the corpus should hold exact ties"
+    assert None in {r["organization_id"] for r in full}
+    assert len(eng.search("x", top_k=5, organization_id="orgC").collect()) == 1
+
+
+def test_zero_vector_does_not_break_search(index_engine):
+    """A punctuation-only document stores an all-zero embedding. Its
+    score is null and ranks last; the rest of its tenant still ranks,
+    and a query with no tokens returns rows with null scores instead of
+    a DIVIDE_BY_ZERO error. The contradiction path's Spark cosine
+    scores the zero vector null too."""
+    eng = index_engine
+    n = eng.read_table("chunks").filter(F.col("organization_id") == "org1").count()
+    for k in (3, n + 2):
+        hits = eng.search("Project Alpha", top_k=k, organization_id="org1").collect()
+        assert len(hits) == min(k, n)
+    hits = eng.search("Project Alpha", top_k=n, organization_id="org1").collect()
+    assert hits[-1]["document_id"] == "/watch/punct.txt"
+    assert hits[-1]["score"] is None
+    assert all(h["score"] is not None for h in hits[:-1])
+    for query in ("", "!!!"):
+        hits = eng.search(query, top_k=3).collect()
+        assert len(hits) == 3 and all(h["score"] is None for h in hits)
+    pairs = eng.contradiction_candidates(new_doc_ids=["/watch/punct.txt"]).collect()
+    assert pairs and all(p["score"] is None for p in pairs)
+
+
+def test_chat_reply_equals_the_spark_aggregate(index_engine):
+    """chat's row (context, citations with float scores, answer) and
+    schema equal the Spark aggregate chat ran over the ranked rows
+    before the chunk index, ties and null scores included."""
+    eng = index_engine
+    for query, org in (("quarterly report", None), ("quarterly report", "orgB"),
+                       ("", "org1"), ("x", "orgC"), ("x", "nobody")):
+        want = _spark_ranking(eng, query, 5, org).agg(
+            F.concat_ws("\n\n", F.collect_list("content")).alias("context"),
+            F.collect_list(F.struct(
+                "document_id", "chunk_id", "content",
+                F.col("score").cast("float").alias("score"),
+            )).alias("citations"),
+        ).withColumn("answer", F.format_string(
+            "Based on the retrieved context, here is what I found regarding"
+            " '%s':\n\n%s", F.lit(query), F.col("context"),
+        ))
+        got = eng.chat(query, top_k=5, organization_id=org)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect(), (query, org)
+
+
+def test_commit_loads_only_new_chunk_files(spark, tmp_path):
+    """The chunk index loads each published file once: a commit costs one
+    load per file it adds, and files it unpublishes leave the index."""
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+    eng.ingest_batch(seed_files(spark))
+    index = eng._chunk_index
+    loads = []
+    load = index._load
+    index._load = lambda rel: loads.append(rel) or load(rel)
+
+    def live():
+        return set(eng._manifest("chunks")["files"])
+
+    def search_and_count():
+        del loads[:]
+        eng.search("alpha", audit=False)
+        assert set(index._view.where) == live()
+        return sorted(loads)
+
+    assert search_and_count() == sorted(live())
+    assert search_and_count() == []
+    steps = [
+        lambda: eng.ingest_batch(spark.createDataFrame(
+            [("/watch/b_doc.txt", "tenant b content here", "orgB", None)],
+            INGEST_FILES,
+        )),
+        lambda: eng.ingest_batch(spark.createDataFrame(
+            [("/watch/project_alpha.md", "Alpha, short.", "org1", None)],
+            INGEST_FILES,
+        )),
+        lambda: eng.forget_document("/watch/beta_analysis.md"),
+        lambda: eng.purge("org1"),
+    ]
+    for step in steps:
+        before = live()
+        step()
+        assert search_and_count() == sorted(live() - before)
+
+
+def test_concurrent_searches_see_only_published_versions(spark, tmp_path):
+    """A reader looping on search() while ingest, update, forget_document
+    and purge commit to chunks sees only whole published versions of
+    the table and raises nothing."""
+    import threading
+
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+    eng.ingest_batch(spark.createDataFrame(
+        [("/watch/b_doc.txt", "tenant b content here", "orgB", None)],
+        INGEST_FILES,
+    ))
+
+    def version():
+        return frozenset(
+            (r["id"], r["content"]) for r in eng.read_table("chunks").collect()
+        )
+
+    valid = {version()}
+    seen: list[frozenset] = []
+    errors: list[BaseException] = []
+    stop = threading.Event()
+
+    def reader():
+        while not stop.is_set():
+            try:
+                hits = eng.search("alpha", top_k=10**6, audit=False).collect()
+                seen.append(frozenset((h["chunk_id"], h["content"]) for h in hits))
+            except Exception as e:  # noqa: BLE001 - the test's subject
+                errors.append(e)
+
+    t = threading.Thread(target=reader)
+    t.start()
+    try:
+        steps = [
+            lambda: eng.ingest_batch(seed_files(spark, org="orgA")),
+            lambda: eng.ingest_batch(spark.createDataFrame(
+                [("/watch/project_alpha.md", "Alpha, short.", "orgA", None)],
+                INGEST_FILES,
+            )),
+            lambda: eng.forget_document("/watch/beta_analysis.md"),
+            lambda: eng.purge("orgA"),
+        ]
+        for step in steps:
+            step()
+            valid.add(version())
+    finally:
+        stop.set()
+        t.join(timeout=120)
+    assert not t.is_alive()
+    assert not errors, errors
+    assert seen and set(seen) <= valid, (len(set(seen)), len(valid))
+    # the purge brings back the first version; the update is its own
+    assert len(valid) == 4

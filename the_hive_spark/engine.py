@@ -23,8 +23,12 @@ with ``pyarrow.parquet.write_table`` into the partition directory Spark
 would have chosen, so a one-row append runs no Spark job. ``events`` and
 ``audit_logs`` keep ``next_id`` in their manifest: callers number added
 rows from 0 and the commit offsets them under the table lock, so ids stay
-dense and unique in commit order across threads and processes. Search is
-a shuffle-free scan + TakeOrdered(k).
+dense and unique in commit order across threads and processes.
+
+Search and chat launch no Spark job: they rank on the driver from a
+``chunk_index.ChunkIndex`` of the chunks table's live files, which loads
+each published file once with pyarrow and scores exactly as the Spark
+``cosine`` expression does.
 """
 
 from __future__ import annotations
@@ -37,6 +41,8 @@ from datetime import datetime, timezone
 from functools import reduce
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -44,6 +50,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import TimestampType
 
 from the_hive_spark import schemas
+from the_hive_spark.chunk_index import ChunkIndex
 from the_hive_spark.functions.chunkers import chunk_sentence_udf
 from the_hive_spark.functions.embedding import bow_embedding_np, make_embedder
 from the_hive_spark.functions.ids import sha256_hex, uuid5_chunk_id
@@ -112,6 +119,7 @@ class HiveEngine:
         self.embedding_dim = embedding_dim
         self.embedding_provider = embedding_provider
         self._embed = make_embedder(embedding_provider, embedding_dim)
+        self._chunk_index = ChunkIndex(self._path("chunks"), embedding_dim)
         os.makedirs(warehouse, exist_ok=True)
 
     # ------------------------------------------------------------- storage
@@ -132,6 +140,29 @@ class HiveEngine:
 
     def read_table(self, name: str) -> DataFrame:
         return self._scan(name, self._manifest(name)["files"])
+
+    def _on_live_files(self, name: str, read):
+        """``read(files)`` on the table's live file list. A listed file
+        is deleted only by the second commit after the manifest was read
+        (a commit deletes what the one before it unpublished); when one
+        has gone, the manifest is read again."""
+        cur = self._manifest(name)
+        while True:
+            try:
+                return read(cur["files"])
+            except FileNotFoundError:
+                new = self._manifest(name)
+                if new["version"] == cur["version"]:
+                    raise
+                cur = new
+
+    def _read_rows(self, name: str, columns: list[str], where: pc.Expression) -> list[dict]:
+        """``columns`` of the live rows matching ``where``, read by
+        pyarrow (a partition column is not among a file's columns)."""
+        root = self._path(name)
+        return self._on_live_files(name, lambda files: ds.dataset(
+            [os.path.join(root, f) for f in files], format="parquet"
+        ).to_table(columns=columns, filter=where).to_pylist() if files else [])
 
     def _scan(self, name: str, files: list[str]) -> DataFrame:
         """Rows of ``files`` (relative paths). A directory read filtered
@@ -263,7 +294,8 @@ class HiveEngine:
         """One parquet file per partition of ``rows``, laid out and typed
         as Spark writes them: the partition column lives in the directory
         name, naive timestamps are local time, and the file carries no
-        embedded Arrow schema (``store_schema=False``) to stay small."""
+        embedded Arrow schema (``store_schema=False``) and no text or
+        list column statistics, to stay small."""
         schema = _TABLE_SCHEMAS[name]
         arrow = to_arrow_schema(schema)
         org = (
@@ -276,6 +308,12 @@ class HiveEngine:
             groups.setdefault("" if org is None else _partition_dir(r[org]), []).append(r)
         ts = {j for j in cols if isinstance(schema.fields[j].dataType, TimestampType)}
         file_schema = pa.schema([arrow.field(j) for j in cols])
+        # min/max of long text is most of a small file, and no reader
+        # prunes on it: statistics only for ids, numbers and timestamps
+        stats_cols = [
+            f.name for f in file_schema
+            if not (pa.types.is_string(f.type) or pa.types.is_list(f.type))
+        ]
         root, moved = self._path(name), []
         for sub, group in groups.items():
             table = pa.Table.from_arrays([
@@ -288,7 +326,10 @@ class HiveEngine:
             ], schema=file_schema)
             rel = os.path.join(sub, f"part-{version:05d}-{len(moved):05d}.parquet")
             os.makedirs(os.path.join(root, sub), exist_ok=True)
-            pq.write_table(table, os.path.join(root, rel), store_schema=False)
+            pq.write_table(
+                table, os.path.join(root, rel), store_schema=False,
+                write_statistics=stats_cols,
+            )
             moved.append(rel)
         return moved
 
@@ -452,29 +493,15 @@ class HiveEngine:
     ) -> DataFrame:
         """T1 top-k cosine semantic search (§3.1 lifecycle).
 
-        Embeds the query with the deterministic mock provider, filters
-        by tenant (partition-pruned), ranks by cosine — scan + project
-        + TakeOrdered(k), no shuffle. Content/tags live in the same row
+        Embeds the query with the deterministic mock provider and ranks
+        the tenant's chunks (every tenant's when ``organization_id`` is
+        None) by cosine, score descending with nulls last, then chunk id.
+        The ranking runs on the driver over the chunk index, no Spark job;
+        the result is a local relation (``schemas.SEARCH_HITS``), so
+        collecting it runs none either. Content/tags live in the same row
         (J1 pre-materialized)."""
-        chunks = self.read_table("chunks")
-        if organization_id is not None:
-            chunks = chunks.filter(F.col("organization_id") == organization_id)
-        qvec = self._embed_query(query)
-        qcol = F.array(*[F.lit(float(x)) for x in qvec])
-        result = (
-            chunks.withColumn("_q", qcol)
-            .withColumn("score", cosine("embedding", "_q"))
-            .select(
-                F.col("id").alias("chunk_id"),
-                "document_id",
-                "content",
-                "chunk_index",
-                "score",
-                F.concat_ws(",", "tags").alias("tags_list"),
-                "organization_id",
-            )
-            .orderBy(F.desc("score"), F.asc("chunk_id"))
-            .limit(top_k)
+        result = self.spark.createDataFrame(
+            self._hits(query, top_k, organization_id)
         )
         if audit:
             self._audit_row(
@@ -485,6 +512,23 @@ class HiveEngine:
             )
         return result
 
+    def _hits(self, query: str, top_k: int, organization_id: str | None) -> pa.Table:
+        view = self._on_live_files("chunks", self._chunk_index.view)
+        rows, score, null = view.top_k(
+            self._embed_query(query), top_k, organization_id
+        )
+        return pa.table([
+            rows["id"],
+            rows["document_id"],
+            rows["content"],
+            rows["chunk_index"],
+            pa.array(score, mask=null),
+            # concat_ws(",", tags): null tags and null elements drop out
+            [",".join(t for t in tags or () if t is not None)
+             for tags in rows["tags"].to_pylist()],
+            rows["organization_id"],
+        ], schema=to_arrow_schema(schemas.SEARCH_HITS))
+
     def chat(
         self,
         query: str,
@@ -492,64 +536,46 @@ class HiveEngine:
         organization_id: str | None = None,
         session_id: str | None = None,
         user_id: str = "local",
-    ):
+    ) -> DataFrame:
         """U7 RAG retrieval: top-k context + citations struct; the
         answer is a template exactly like chat_handler.go:145-150.
 
-        When ``session_id`` is given, the exchange persists to
+        Retrieval is ``search``'s ranking, unaudited; the reply is built
+        on the driver and returned as a one-row local relation
+        (``schemas.CHAT_REPLY``), so neither call nor collect runs a
+        Spark job. When ``session_id`` is given, the exchange persists to
         chat_sessions / chat_messages (ChatStore semantics inferred
-        from chat_handler.go:152-196). Retrieval then runs once: the
-        returned DataFrame holds the row that was stored."""
-        hits = self.search(
-            query, top_k=top_k, organization_id=organization_id, audit=False
-        )
-        ctx = hits.agg(
-            F.concat_ws("\n\n", F.collect_list("content")).alias("context"),
-            F.collect_list(
-                F.struct(
-                    F.col("document_id"),
-                    F.col("chunk_id"),
-                    F.col("content"),
-                    F.col("score").cast("float").alias("score"),
-                )
-            ).alias("citations"),
-        )
-        result = ctx.withColumn(
-            "answer",
-            F.format_string(
-                "Based on the retrieved context, here is what I found regarding"
-                " '%s':\n\n%s",
-                F.lit(query),
-                F.col("context"),
-            ),
-        )
-        if session_id is None:
-            return result
-        row = result.collect()[0]  # single aggregate row by construction
-        self._persist_chat(query, row, session_id, user_id, organization_id or "")
-        # an Arrow table becomes a local relation: collecting it runs no job
-        return self.spark.createDataFrame(pa.Table.from_pylist(
-            [row.asDict(recursive=True)], schema=to_arrow_schema(result.schema)
-        ))
+        from chat_handler.go:152-196): the returned row is the row that
+        was stored."""
+        hits = self._hits(query, top_k, organization_id).to_pylist()
+        context = "\n\n".join(h["content"] for h in hits if h["content"] is not None)
+        row = {
+            "context": context,
+            "citations": [
+                {k: h[k] for k in ("document_id", "chunk_id", "content", "score")}
+                for h in hits
+            ],
+            "answer": "Based on the retrieved context, here is what I found"
+            f" regarding '{query}':\n\n{context}",
+        }
+        # the float cast of each citation score happens in the Arrow array
+        reply = pa.Table.from_pylist([row], schema=to_arrow_schema(schemas.CHAT_REPLY))
+        if session_id is not None:
+            self._persist_chat(
+                query, reply.to_pylist()[0], session_id, user_id, organization_id or ""
+            )
+        return self.spark.createDataFrame(reply)
 
     def _persist_chat(self, query, row, session_id, user_id, org) -> None:
-        mine = F.col("session_id") == session_id
-        # one scan-only lookup (a global max would add a shuffle job): a
-        # null for the session's row, then each message_index
-        seen = [
-            r.m for r in
-            self.read_table("chat_sessions").filter(mine)
-            .select(F.lit(None).cast("int").alias("m"))
-            .unionByName(
-                self.read_table("chat_messages").filter(mine)
-                .select(F.col("message_index").alias("m"))
-            )
-            .collect()
-        ]
+        mine = pc.field("session_id") == session_id
         now = datetime.now(timezone.utc)
-        if None not in seen:
+        if not self._read_rows("chat_sessions", ["session_id"], mine):
             self._append("chat_sessions", [(session_id, user_id, org, query[:50], now)])
-        base = 1 + max((m for m in seen if m is not None), default=-1)
+        base = 1 + max(
+            (r["message_index"] for r in
+             self._read_rows("chat_messages", ["message_index"], mine)),
+            default=-1,
+        )
         self._append("chat_messages", [
             (session_id, base, "user", query, [], now),
             (session_id, base + 1, "assistant", row["answer"], row["citations"], now),
@@ -1227,12 +1253,16 @@ class HiveEngine:
         return logs.orderBy(F.desc("timestamp"), F.desc("id")).limit(limit)
 
     def stats(self) -> dict[str, int]:
-        """A1/A2 chunk + vector counts."""
-        chunks = self.read_table("chunks")
+        """A1/A2 chunk + vector counts, from file footers and the chunk
+        index: no Spark job."""
+        chunks = self._on_live_files("chunks", self._chunk_index.view).data
+        root = self._path("documents")
         return {
-            "total_chunks": chunks.count(),
-            "total_vectors": chunks.filter(F.col("embedding").isNotNull()).count(),
-            "total_documents": self.read_table("documents").count(),
+            "total_chunks": len(chunks.ids),
+            "total_vectors": int(chunks.vec.sum()),
+            "total_documents": self._on_live_files(
+                "documents", lambda files: sum(_num_rows(root, f) for f in files)
+            ),
         }
 
     def purge(self, organization_id: str | None = None) -> None:

@@ -6,10 +6,11 @@ top-k cosine ANN against Qdrant (T1, internal/vectordb/vectordb.go:
 variant the training-data pipeline needs.
 
 Two precision modes:
-- ``cosine_topk`` (library, full float precision) — the real search
-  path; brute-force exact scan + TakeOrdered(k). At 100 TB the scan
-  is embarrassingly parallel (no shuffle at all: map + per-partition
-  top-k + driver merge of k·partitions rows).
+- ``cosine_topk`` (library, full float precision) — brute-force exact
+  scan + TakeOrdered(k). At 100 TB the scan is embarrassingly parallel
+  (no shuffle at all: map + per-partition top-k + driver merge of
+  k·partitions rows). ``HiveEngine.search`` computes the same
+  ``cosine`` scores, bit for bit, on the driver (``chunk_index.py``).
 - quantized registry queries — elements scaled to integer
   milli-units so dot products are exact int64 arithmetic and results
   hash identically on any engine/partitioning (the oracle contract).
@@ -52,7 +53,10 @@ def l2_norm(a: str) -> Column:
 
 
 def cosine(a: str, b: str) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+    """Cosine similarity; null when either side has a zero norm (an
+    all-zero embedding, or the query of a text with no tokens), which a
+    plain division would turn into a DIVIDE_BY_ZERO error under ANSI."""
+    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
 def cosine_topk(

@@ -15,6 +15,7 @@ from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     BooleanType,
+    DoubleType,
     FloatType,
     IntegerType,
     LongType,
@@ -225,5 +226,29 @@ LOGOS = StructType(
         StructField("content_type", StringType(), True),
         StructField("n_bytes", LongType(), True),
         StructField("uploaded_at", TimestampType(), True),
+    ]
+)
+
+# HiveEngine.search rows (T1 hit: the chunk, its score and its tags
+# joined with ","), ranked on the driver; nullability as Spark reads
+# the chunks table back
+SEARCH_HITS = StructType(
+    [
+        StructField("chunk_id", StringType(), True),
+        StructField("document_id", StringType(), True),
+        StructField("content", StringType(), True),
+        StructField("chunk_index", IntegerType(), True),
+        StructField("score", DoubleType(), True),
+        StructField("tags_list", StringType(), False),
+        StructField("organization_id", StringType(), True),
+    ]
+)
+
+# HiveEngine.chat row (U7: context, citations, templated answer)
+CHAT_REPLY = StructType(
+    [
+        StructField("context", StringType(), False),
+        StructField("citations", ArrayType(CITATION, False), False),
+        StructField("answer", StringType(), False),
     ]
 )
