@@ -123,8 +123,8 @@ def test_contradiction_candidates_no_cartesian(engine):
 
 
 def test_contradiction_candidates_new_doc_batch(engine):
-    """The per-ingest-batch path: exact top-k for the new docs via one
-    broadcast pass over the corpus (the shape the reference runs)."""
+    """The per-ingest-batch path: exact top-k for the new docs, ranked
+    on the driver over the chunk index (the shape the reference runs)."""
     new = ["/watch/project_alpha.md"]
     rows = engine.contradiction_candidates(top_k=3, new_doc_ids=new).collect()
     assert {r["source_doc_id"] for r in rows} == set(new)
@@ -971,3 +971,122 @@ def test_concurrent_searches_see_only_published_versions(spark, tmp_path):
     assert seen and set(seen) <= valid, (len(set(seen)), len(valid))
     # the purge brings back the first version; the update is its own
     assert len(valid) == 4
+
+
+@pytest.fixture(scope="module")
+def reaction_engine(spark, tmp_path_factory):
+    """Documents on the analyst reactions' edge cases: the seed corpus
+    in org1 and the same texts under other paths in orgB (exact score
+    ties between documents); a document with no tenant (the default
+    partition); a punctuation-only document (a zero vector, so null
+    scores); keywords in upper and mixed case, one only after chunk 0,
+    and non-ASCII text; and chunk rows committed directly: a null first
+    chunk (a null alert), a null chunk in the middle of a document, and
+    a document whose chunks were written out of chunk_index order.
+    Three rules, one of them inactive, in three tenants."""
+    from datetime import datetime
+
+    from the_hive_spark import schemas
+    from the_hive_spark.functions.embedding import bow_embedding_np
+    from tests.fixtures import ALERT_RULE
+
+    eng = HiveEngine(spark, str(tmp_path_factory.mktemp("wh_reactions")), embedding_dim=32)
+    eng.ingest_batch(seed_files(spark))
+    eng.ingest_batch(seed_files(spark, org="orgB").withColumn(
+        "path", F.regexp_replace("path", "^/watch/", "/copy/")
+    ))
+    late = " ".join(
+        f"Line {i} of the memo is harmless." for i in range(60)
+    ) + " The final line is CONFIDENTIAL pricing."
+    eng.ingest_batch(spark.createDataFrame([
+        ("/r/shared.txt", "Nobody owns this quarterly report. Confidential.", None, None),
+        ("/r/punct.txt", "!!! ??? ---", "org1", None),
+        ("/r/late.md", late, "org1", None),
+        ("/r/umlaut.txt", "Überblick: die PRICING-Straße, ſecret und Größe.", "orgC", None),
+        ("/r/upper.txt", "CONFIDENTIAL: QUARTERLY PRICING REPORT.", "orgC", None),
+    ], INGEST_FILES))
+    now = datetime(2026, 1, 1)
+
+    def chunk(doc, i, content, org, vec_text):
+        vec = [float(x) for x in bow_embedding_np(vec_text, 32)]
+        return (f"{doc}#{i}", doc, content, i, now, org, vec, {}, [])
+
+    eng._commit("chunks", spark.createDataFrame([
+        chunk("/r/nullfirst.txt", 0, None, "org1", "quarterly report"),
+        chunk("/r/nullfirst.txt", 1, "A secret follows the gap.", "org1", "secret gap"),
+        chunk("/r/shuffled.txt", 2, "The third part is Confidential.", "orgB", "third"),
+        chunk("/r/shuffled.txt", 0, "The first part: quarterly budget.", "orgB",
+              "quarterly budget"),
+        chunk("/r/shuffled.txt", 1, None, "orgB", "middle"),
+    ], schemas.CHUNKS).coalesce(1))
+    eng.add_rule(1, ALERT_RULE, organization_id="org1")
+    eng.add_rule(2, "Does this contradict existing documents about pricing?", "orgB")
+    eng.add_rule(3, "An inactive rule about secrets", active=False)
+    return eng
+
+
+def _sorted(rows):
+    return sorted(rows, key=lambda r: tuple("" if v is None else str(v) for v in r))
+
+
+def _id_forms(spark, ids):
+    """The same ids as a list and as a (repartitioned) DataFrame."""
+    return ids, spark.createDataFrame([(i,) for i in ids], "document_id string").repartition(3)
+
+
+def test_contradiction_batch_equals_the_broadcast_plan(spark, reaction_engine):
+    """The driver-side batch path's rows and schema equal the broadcast
+    nested-loop plan it replaced: scores with ==, exact ties across
+    documents broken by target id, a zero vector's null scores ranked
+    last, null and mixed-case CONFIDENTIAL content (null and true
+    ``contradicts``), several tenants and the default partition, for
+    id lists and DataFrames."""
+    from tests.reference_plans import spark_contradiction_batch
+
+    eng = reaction_engine
+    n = eng.read_table("documents").count()
+    batches = [
+        ["/watch/project_alpha.md"],
+        ["/watch/beta_analysis.md", "/copy/beta_analysis.md", "/r/shared.txt"],
+        ["/r/punct.txt", "/r/nullfirst.txt", "/r/upper.txt", "/r/umlaut.txt",
+         "/r/late.md", "/r/shuffled.txt", "/watch/no-such-doc"],
+    ]
+    for batch in batches:
+        for ids in _id_forms(spark, batch):
+            for k in (2, 5, n + 2):
+                want = spark_contradiction_batch(eng, ids, k)
+                got = eng.contradiction_candidates(top_k=k, new_doc_ids=ids)
+                assert got.schema == want.schema
+                assert _sorted(got.collect()) == _sorted(want.collect()), (batch, k)
+    rows = eng.contradiction_candidates(top_k=n, new_doc_ids=batches[2]).collect()
+    assert {r["contradicts"] for r in rows} == {None, False, True}
+    assert any(r["score"] is None for r in rows)
+    alpha = eng.contradiction_candidates(top_k=n, new_doc_ids=batches[0]).collect()
+    scores = [r["score"] for r in alpha if r["score"] is not None]
+    assert len(scores) > len(set(scores)), "the corpus should hold exact ties"
+
+
+def test_rule_matches_equal_the_spark_aggregate(spark, reaction_engine):
+    """evaluate_rules' rows and schema equal the Spark aggregate it
+    replaced (every active rule of every tenant against each requested
+    document's chunk_index-ordered text), for all documents, an id list
+    and an id DataFrame; the persisted rows are the returned ones."""
+    from tests.reference_plans import spark_rule_matches
+
+    eng = reaction_engine
+    batch = ["/r/late.md", "/r/umlaut.txt", "/r/upper.txt", "/r/shared.txt",
+             "/r/nullfirst.txt", "/r/shuffled.txt", "/r/punct.txt",
+             "/watch/project_alpha.md", "/watch/no-such-doc", "/r/late.md"]
+    for ids in (None, *_id_forms(spark, batch), []):
+        want = spark_rule_matches(eng, ids)
+        before = eng.read_table("rule_matches").count()
+        got = eng.evaluate_rules(ids)
+        assert got.schema == want.schema
+        rows = _sorted(got.collect())
+        assert rows == _sorted(want.collect()), ids
+        assert eng.read_table("rule_matches").count() == before + len(rows)
+    docs = {r["uploaded_doc"] for r in eng.evaluate_rules(batch).collect()}
+    assert docs == {
+        "/r/late.md", "/r/umlaut.txt", "/r/upper.txt", "/r/shared.txt",
+        "/r/nullfirst.txt", "/r/shuffled.txt", "/watch/project_alpha.md",
+    }

@@ -226,22 +226,32 @@ def test_all_new_ingest_batch_job_count(spark, tmp_path):
     assert jobs <= 15, jobs
 
 
-def test_engine_contradiction_batch_path_broadcasts_batch(plan_engine):
-    """contradiction_candidates(new_doc_ids=[...]): the small NEW
-    batch broadcasts against one corpus pass — every broadcast subtree
-    must carry the batch-id filter, not the bare corpus."""
-    some_doc = plan_engine.read_table("documents").limit(1).collect()
-    df = plan_engine.contradiction_candidates(
-        new_doc_ids=[some_doc[0]["id"]]
-    )
-    plan = executed_plan(df)
-    assert "CartesianProduct" not in plan
-    subtrees = broadcast_subtrees(df)
-    assert subtrees, "batch path should broadcast the new-doc batch"
-    for sub in subtrees:
-        assert "document_id IN" in sub or "document_id#" in sub and (
-            "Filter" in sub or "LocalLimit" in sub or "HashAggregate" in sub
-        ), "broadcast subtree is not the filtered batch:\n" + sub
+def test_engine_reactions_run_no_spark_job(spark, plan_engine):
+    """The analyst reactions read the chunk index on the driver and
+    commit their matches with pyarrow. evaluate_rules,
+    evaluate_rules_cross_doc and contradiction_candidates run no Spark
+    job for an id list, the caller's collect included, and at most the
+    one job that collects the ids of a DataFrame. The streaming
+    pipeline's active-rules guard runs none."""
+    plan_engine.add_rule(
+        41, "Does this contradict other documents about confidential pricing?")
+    frame = plan_engine.read_table("documents").select("id")
+    docs = [r["id"] for r in frame.collect()]
+    reactions = {
+        "rules": plan_engine.evaluate_rules,
+        "cross_doc": plan_engine.evaluate_rules_cross_doc,
+        "contradiction": lambda ids: plan_engine.contradiction_candidates(
+            new_doc_ids=ids),
+    }
+    for name, react in reactions.items():
+        rows, frame_rows = [], []
+        assert _jobs_in(spark, f"{name}_list", lambda: rows.extend(
+            react(docs).collect())) == 0, name
+        assert _jobs_in(spark, f"{name}_frame", lambda: frame_rows.extend(
+            react(frame).collect())) <= 1, name
+        if name != "cross_doc":
+            assert rows and frame_rows, name
+    assert _jobs_in(spark, "active_rule_rows", plan_engine.active_rule_rows) == 0
 
 
 def test_engine_contradiction_sweep_path_no_all_pairs(plan_engine):
@@ -304,18 +314,19 @@ def test_ann_bucket_layout_prunes_partitions(spark, tmp_path):
 
 def test_engine_contradiction_strategy_switches_on_measured_stats(plan_engine):
     """The advisor wiring (round-4 verdict ask #6): the batch path's
-    plan SHAPE is chosen from the batch's measured size vs the
-    session's broadcast threshold. Small batch → exact broadcast
-    nested-loop top-k; batch bigger than the threshold → banded-LSH
+    plan SHAPE is chosen from the batch's size vs the session's
+    broadcast threshold. Small batch → exact top-k on the driver over
+    the chunk index; batch bigger than the threshold → banded-LSH
     index path (an equi-join plan with NO nested loop), restricted to
     the batch's sources. AQE can demote a shuffle to a broadcast but
-    can never make this logical switch — hence advise_relation."""
+    can never make this logical switch — hence advise_rowcount."""
     spark = plan_engine.spark
     some_doc = plan_engine.read_table("documents").limit(1).collect()[0]["id"]
 
-    # default threshold (10 MB): tiny batch → exact broadcast path
+    # default threshold (10 MB): tiny batch → exact top-k on the
+    # driver, returned as a local relation
     df_small = plan_engine.contradiction_candidates(new_doc_ids=[some_doc])
-    assert "BroadcastNestedLoopJoin" in executed_plan(df_small)
+    assert executed_plan(df_small).lstrip().startswith("LocalTableScan")
 
     # force the measured decision the other way: any batch is now
     # "too big to broadcast" → LSH index path

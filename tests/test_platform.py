@@ -152,6 +152,39 @@ def test_cross_doc_rules(engine, spark):
     assert all(r["matched_doc"] for r in out)
 
 
+def test_cross_doc_rows_equal_the_spark_plan(engine, spark):
+    """evaluate_rules_cross_doc ranks neighbors on the driver over the
+    chunk index; its rows and schema equal the all-pairs Spark plan it
+    replaced, for every document and for ids given as a list or a
+    DataFrame, at two k."""
+    from tests.fixtures import CONFIDENTIAL_DOC
+    from tests.reference_plans import spark_cross_doc_matches
+
+    name, text = CONFIDENTIAL_DOC
+    engine.ingest_batch(
+        spark.createDataFrame(
+            [(f"/in/{name}", text, "", {}),
+             ("/in/secret.txt", "A secret about confidential pricing.", "", {})],
+            "path string, content string, organization_id string, "
+            "metadata map<string,string>",
+        )
+    )
+    engine.add_rule(1, "Does this document contradict existing documents"
+                       " about confidential pricing?")
+    engine.add_rule(2, "Does this document mention pricing?")  # single-doc
+    engine.add_rule(3, "Is it inconsistent with other documents?")
+    ids = [f"/in/{name}", "/in/project_alpha.md", "/in/no-such-doc"]
+    frame = spark.createDataFrame([(i,) for i in ids], "document_id string")
+    key = lambda r: tuple(map(str, r))  # noqa: E731
+    for doc_ids in (None, ids, frame):
+        for k in (2, 10):
+            want = spark_cross_doc_matches(engine, doc_ids, k)
+            got = engine.evaluate_rules_cross_doc(doc_ids, top_k=k)
+            assert got.schema == want.schema
+            assert sorted(got.collect(), key=key) == sorted(want.collect(), key=key)
+    assert {r["rule_id"] for r in engine.evaluate_rules_cross_doc(top_k=5).collect()} == {1, 3}
+
+
 def test_api_key_lifecycle(engine):
     key = engine.generate_api_key("drone-1")
     assert key.startswith("hive_")

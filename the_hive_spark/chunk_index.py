@@ -1,8 +1,11 @@
 """Exact top-k cosine over the ``chunks`` table's live files, on the driver.
 
-``HiveEngine.search`` and ``chat`` rank from here and launch no Spark
-job. The index caches the rows of each published parquet file under the
-file's relative path. Files are immutable and their names are unique,
+``HiveEngine.search`` and ``chat`` rank from here, and the analyst
+reactions (``evaluate_rules``, ``evaluate_rules_cross_doc`` and the
+batch path of ``contradiction_candidates``) read their chunks and rank
+document neighbors here; none of them launches a Spark job. The index
+caches the rows of each published parquet file under the file's
+relative path. Files are immutable and their names are unique,
 so a loaded file never changes: a query loads only the listed files it
 has not seen, with pyarrow, and drops the files no longer listed.
 
@@ -16,7 +19,8 @@ embedding, a null component, a length other than the query's (the
 shorter side reads as nulls in ``zip_with``) or a zero norm on either
 side (``try_divide``). Ranking is score descending, nulls last, then
 chunk id ascending, the order of Spark's ``orderBy(desc(score),
-asc(chunk_id))``.
+asc(chunk_id))``; document neighbors break ties by target document id
+instead.
 
 Memory is one float32 matrix of every live chunk (n × dim × 4 B) plus
 the chunk rows without their embeddings. Corpora past driver memory
@@ -40,6 +44,8 @@ import pyarrow.parquet as pq
 # the chunk columns a hit returns, besides its tenant and score
 _COLS = ["id", "document_id", "content", "chunk_index", "tags"]
 _DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+# query-candidate pairs one fold covers (two float64 buffers of this size)
+_PAIR_BLOCK = 1 << 20
 # every file's rows, whichever write produced it (nullability differs)
 _SCHEMA = pa.schema([
     ("id", pa.string()),
@@ -91,10 +97,55 @@ class _View:
         null = ~d.ok[s:e] | (den == 0)
         with np.errstate(divide="ignore", invalid="ignore"):
             score = _fold(d.emb[s:e], q64) / den
-        # Spark sorts NaN above every number
-        desc = np.where(np.isnan(score), -np.inf, -score)
-        order = np.lexsort((d.ids[s:e], desc, null))[:k]
+        order = np.lexsort((d.ids[s:e], _desc(score, null), null))[:k]
         return d.rows.take(s + order), score[order], null[order]
+
+    def neighbors(
+        self, src: np.ndarray, cand: np.ndarray, k: int
+    ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+        """For each document of the rows ``src``, the ``k`` rows of
+        ``cand`` from other documents nearest to it, ranked as Spark's
+        window ``orderBy(desc(score), asc(target document_id))`` over
+        ``cosine(source, target)`` ranks them. A document with rows in
+        several tenants ranks the union of their pairs; a row with a
+        null document_id pairs with nothing. Returns the source row,
+        target row, score and null mask of each pair, grouped by source
+        document in id order. Sources are folded a block at a time, each
+        block against every candidate."""
+        d = self.data
+        docs = d.rows["document_id"]
+        src, cand = (
+            r[docs.take(r).is_valid().to_numpy(zero_copy_only=False)] for r in (src, cand)
+        )
+        # each document id as its rank among them: equal ids, equal codes
+        code = np.unique(np.array(
+            docs.take(np.concatenate([src, cand])).to_pylist(), dtype=str
+        ), return_inverse=True)[1]
+        scode, ccode = code[:len(src)], code[len(src):]
+        e = np.asfortranarray(d.emb[cand])
+        step = max(1, _PAIR_BLOCK // max(len(cand), 1))
+        pairs = [(np.empty(0, int), np.empty(0, int), np.empty(0), np.empty(0, bool))]
+        for b in range(0, len(src) if k > 0 else 0, step):
+            rows = src[b:b + step]
+            den = d.norm[rows, None] * d.norm[cand]
+            null = ~d.ok[rows, None] | ~d.ok[cand] | (den == 0)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                score = _fold(d.emb[rows][:, None], e[None]) / den
+            same = scode[b:b + step, None] == ccode
+            keys = (np.broadcast_to(ccode, score.shape), _desc(score, null), null, same)
+            top = np.lexsort(keys, axis=1)[:, :k]
+            i, j = np.nonzero(~np.take_along_axis(same, top, axis=1))
+            t = top[i, j]
+            pairs.append((b + i, t, score[i, t], null[i, t]))
+        si, ti, score, null = (np.concatenate(p) for p in zip(*pairs))
+        # rank again within each source document, which merges its rows
+        order = np.lexsort((ccode[ti], _desc(score, null), null, scode[si]))
+        grp = scode[si][order]
+        first = np.ones(len(grp), bool)
+        first[1:] = grp[1:] != grp[:-1]
+        start = np.maximum.accumulate(np.where(first, np.arange(len(grp)), 0))
+        keep = order[np.arange(len(grp)) - start < k]
+        return src[si[keep]], cand[ti[keep]], score[keep], null[keep]
 
 
 class ChunkIndex:
@@ -163,6 +214,12 @@ def _build(files: tuple[str, ...], parts: dict[str, _Rows], dim: int) -> _View:
     ))
 
 
+def _desc(score: np.ndarray, null: np.ndarray) -> np.ndarray:
+    """An ascending sort key for score descending: Spark sorts NaN above
+    every number; null scores tie (they sort last on the null mask)."""
+    return np.where(null, 0.0, np.where(np.isnan(score), -np.inf, -score))
+
+
 def _tenant(rel: str) -> str | None:
     """The organization_id of a file, read from its partition directory
     as Spark reads it: the default partition is null."""
@@ -171,12 +228,15 @@ def _tenant(rel: str) -> str | None:
 
 
 def _fold(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Per row i, sum_j a[i, j] * b[..., j] folded left to right in
-    float64, as Spark's ``aggregate(zip_with(a, b, x * y), 0D, acc + v)``
-    does. ``b`` is one vector, or a matrix shaped like ``a``."""
-    acc = np.zeros(len(a))
-    prod = np.empty(len(a))
-    for j in range(a.shape[1]):
-        np.multiply(a[:, j], b[..., j], out=prod, dtype=np.float64)
+    """sum_j a[..., j] * b[..., j] folded left to right in float64, as
+    Spark's ``aggregate(zip_with(a, b, x * y), 0D, acc + v)`` does. The
+    leading axes of ``a`` and ``b`` broadcast: rows against one vector,
+    rows against rows, or a block of queries (``q[:, None]``) against
+    rows (``e[None]``); every element keeps the same fold."""
+    shape = np.broadcast_shapes(a.shape[:-1], b.shape[:-1])
+    acc = np.zeros(shape)
+    prod = np.empty(shape)
+    for j in range(a.shape[-1]):
+        np.multiply(a[..., j], b[..., j], out=prod, dtype=np.float64)
         np.add(acc, prod, out=acc)
     return acc

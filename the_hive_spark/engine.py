@@ -28,7 +28,9 @@ dense and unique in commit order across threads and processes.
 Search and chat launch no Spark job: they rank on the driver from a
 ``chunk_index.ChunkIndex`` of the chunks table's live files, which loads
 each published file once with pyarrow and scores exactly as the Spark
-``cosine`` expression does.
+``cosine`` expression does. The analyst reactions to an ingest batch
+(rule evaluation and contradiction candidates) read the same index, so
+they launch no job beyond collecting a DataFrame of document ids.
 """
 
 from __future__ import annotations
@@ -40,6 +42,7 @@ import os
 from datetime import datetime, timezone
 from functools import reduce
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
@@ -47,7 +50,7 @@ import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import TimestampType
+from pyspark.sql.types import StructType, TimestampType
 
 from the_hive_spark import schemas
 from the_hive_spark.chunk_index import ChunkIndex
@@ -630,64 +633,56 @@ class HiveEngine:
             rules = rules.filter(F.col("organization_id") == organization_id)
         return rules
 
+    def active_rule_rows(self) -> list[dict]:
+        """Every tenant's active rules (id, query), read by pyarrow: no
+        Spark job."""
+        return self._read_rows("rules", ["id", "query"], pc.field("active"))
+
     def evaluate_rules(
         self, document_ids: list[str] | DataFrame | None = None
     ) -> DataFrame:
         """J3 rule × document cross-apply with the U5 deterministic
         fallback evaluator (keyword contains ⇒ YES).
 
-        ``document_ids`` may be a small explicit list (API calls) or a
-        single-column ``document_id`` DataFrame (streaming batches) —
-        the DataFrame form is restricted by semi-join, so an
-        ``availableNow`` backlog batch never round-trips millions of
-        ids through the driver as an ``isin`` literal.
-
-        Returns rule_matches rows; also persists them."""
-        docs = (
-            self.read_table("chunks")
-            .groupBy("document_id", "organization_id")
-            .agg(
-                # chunks joined in chunk_index order (the reference joins
-                # in *arrival* order, hive_service.go:157-161 — a quirk we
-                # consciously fix; SURVEY.md §7.3)
-                F.expr(
-                    "concat_ws('\\n\\n', transform("
-                    "array_sort(collect_list(struct(chunk_index, content))),"
-                    " s -> s.content))"
-                ).alias("full_text")
-            )
-        )
-        docs = _restrict_to_ids(docs, "document_id", document_ids)
-        rules = self.active_rules()
-        kw_hits = [
-            F.when(
-                F.instr(F.lower("full_text"), kw) > 0, F.lit(kw)
-            )
-            for kw in RULE_FALLBACK_KEYWORDS
-        ]
-        matched = (
-            docs.crossJoin(F.broadcast(rules.select(F.col("id").alias("rule_id"), F.col("query").alias("rule_query"))))
-            .withColumn("matched_kws", F.array_compact(F.array(*kw_hits)))
-            .filter(F.size("matched_kws") > 0)
-        )
-        out = matched.select(
-            "rule_id",
-            "rule_query",
-            F.col("document_id").alias("uploaded_doc"),
-            F.lit("").alias("matched_doc"),
-            F.lit("single_doc").alias("match_type"),
-            F.format_string(
-                "YES: document contains keywords [%s]",
-                F.concat_ws(",", "matched_kws"),
-            ).alias("ai_explanation"),
-            "organization_id",
-        )
-        self._append("rule_matches", out)
+        ``document_ids`` (every document when None) come to the driver:
+        a list as is, a single-column ``document_id`` DataFrame
+        (streaming batches) by one collect. Each document's text is
+        assembled from the chunk index, so the evaluation reads only
+        the requested documents' chunks and launches no Spark job
+        beyond that collect. Returns the rule_matches rows as a local
+        relation (``schemas.SINGLE_DOC_MATCHES``); also persists them
+        with pyarrow."""
+        ids = _on_driver(document_ids)
+        rules = self.active_rule_rows()
+        rows = self._on_live_files("chunks", self._chunk_index.view).data.rows
+        if ids is not None:
+            rows = rows.filter(pc.is_in(rows["document_id"], pa.array(ids, pa.string())))
+        parts: dict[tuple, list] = {}
+        for doc, org, i, content in zip(*(
+            rows[c].to_pylist()
+            for c in ("document_id", "organization_id", "chunk_index", "content")
+        )):
+            parts.setdefault((doc, org), []).append((i, content))
+        matches = []
+        for (doc, org), chunks in parts.items():
+            # chunks joined in chunk_index order, as array_sort orders
+            # (chunk_index, content) structs (the reference joins in
+            # *arrival* order, hive_service.go:157-161 — a quirk we
+            # consciously fix; SURVEY.md §7.3); null contents drop out
+            chunks.sort(key=lambda p: (p[0] is not None, p[0] or 0, p[1] is not None, p[1] or ""))
+            text = "\n\n".join(c for _, c in chunks if c is not None).lower()
+            kws = [kw for kw in RULE_FALLBACK_KEYWORDS if kw in text]
+            if kws:
+                why = f"YES: document contains keywords [{','.join(kws)}]"
+                matches += [
+                    (r["id"], r["query"], doc, "", "single_doc", why, org) for r in rules
+                ]
+        self._append("rule_matches", matches)
         self._audit_row(
             "127.0.0.1", "RULE_EVAL",
             "standing rules evaluated (single_doc)", "",
         )
-        return out
+        return self._local(schemas.SINGLE_DOC_MATCHES, matches)
 
     # NOTE: evaluate_rules_cross_doc (below) writes its own RULE_EVAL
     # audit row too — rule_events() advertises the COMPLETE evaluation
@@ -700,72 +695,36 @@ class HiveEngine:
         """J4: cross-doc rules (query text hits a P9 keyword,
         analyst.go:381-400) evaluate each new doc against its top-k
         most-similar neighbors (analyst.go:451-568). Deterministic
-        fallback: the pair matches when BOTH docs contain a rule
-        keyword (mirroring the single-doc U5 fallback applied to the
-        pair). Neighbors come from the J2 similarity self-join."""
-        is_cross = F.lit(False)
-        for kw in CROSS_DOC_KEYWORDS:
-            is_cross = is_cross | (F.instr(F.lower("query"), kw) > 0)
-        cross_rules = self.active_rules().filter(is_cross).select(
-            F.col("id").alias("rule_id"), F.col("query").alias("rule_query")
-        )
-        pairs = self._neighbor_pairs(top_k)
-        pairs = _restrict_to_ids(pairs, "source_doc_id", document_ids)
-
-        kw_hit_both = F.lit(False)
-        for kw in RULE_FALLBACK_KEYWORDS:
-            kw_hit_both = kw_hit_both | (
-                (F.instr(F.lower("src_content"), kw) > 0)
-                & (F.instr(F.lower("dst_content"), kw) > 0)
-            )
-        out = (
-            pairs.crossJoin(F.broadcast(cross_rules))
-            .filter(kw_hit_both)
-            .select(
-                "rule_id",
-                "rule_query",
-                F.col("source_doc_id").alias("uploaded_doc"),
-                F.col("target_doc_id").alias("matched_doc"),
-                F.lit("cross_doc").alias("match_type"),
-                F.lit("YES: both documents contain rule keywords").alias(
-                    "ai_explanation"
-                ),
-                F.lit("").alias("organization_id"),
-            )
-        )
-        self._append("rule_matches", out)
+        fallback: the pair matches when BOTH docs' first chunks contain
+        the same rule keyword (mirroring the single-doc U5 fallback
+        applied to the pair). Neighbors are ``contradiction_candidates``'
+        exact driver-side ranking over the chunk index, for the
+        requested documents only (every document when None); the rows
+        come back as a local relation (``schemas.CROSS_DOC_MATCHES``)."""
+        rules = [
+            (r["id"], r["query"]) for r in self.active_rule_rows()
+            if r["query"] is not None
+            and any(kw in r["query"].lower() for kw in CROSS_DOC_KEYWORDS)
+        ]
+        rows, s, t, _, _ = self._first_chunk_neighbors(_on_driver(document_ids), top_k)
+        doc, content = rows["document_id"].to_pylist(), rows["content"].to_pylist()
+        matches = []
+        for a, b in zip(s, t):
+            src, dst = content[a], content[b]
+            if src is not None and dst is not None and any(
+                kw in src.lower() and kw in dst.lower() for kw in RULE_FALLBACK_KEYWORDS
+            ):
+                matches += [
+                    (rid, query, doc[a], doc[b], "cross_doc",
+                     "YES: both documents contain rule keywords", "")
+                    for rid, query in rules
+                ]
+        self._append("rule_matches", matches)
         self._audit_row(
             "127.0.0.1", "RULE_EVAL",
             "standing rules evaluated (cross_doc)", "",
         )
-        return out
-
-    def _neighbor_pairs(self, top_k: int) -> DataFrame:
-        """Top-k similarity pairs with both sides' first-chunk content."""
-        from pyspark.sql import Window
-
-        doc_vecs = (
-            self.read_table("chunks")
-            .filter(F.col("chunk_index") == 0)
-            .select("document_id", "embedding", "content")
-        )
-        a, b = doc_vecs.alias("a"), doc_vecs.alias("b")
-        pairs = a.join(
-            b, F.col("a.document_id") != F.col("b.document_id")
-        ).withColumn("score", cosine("a.embedding", "b.embedding"))
-        w = Window.partitionBy("a.document_id").orderBy(
-            F.desc("score"), F.asc("b.document_id")
-        )
-        return (
-            pairs.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= top_k)
-            .select(
-                F.col("a.document_id").alias("source_doc_id"),
-                F.col("b.document_id").alias("target_doc_id"),
-                F.col("a.content").alias("src_content"),
-                F.col("b.content").alias("dst_content"),
-            )
-        )
+        return self._local(schemas.CROSS_DOC_MATCHES, matches)
 
     # ------------------------------------------------------------ api keys
 
@@ -1038,23 +997,23 @@ class HiveEngine:
         the candidate pairs the analyst would LLM-check (analyst.go:
         295-377, which takes the top-5 *ANN* neighbors per new doc from
         its vector store). Deterministic fallback marks a 'contradicts'
-        edge when both docs alert on the keyword predicate.
+        edge when both docs alert on the keyword predicate. A document
+        is its first chunk's vector and content.
 
         Two scale paths, neither a cartesian:
 
         - ``new_doc_ids`` given (the per-ingest-batch shape the
-          reference actually runs; a list for explicit API calls, or a
-          single-column DataFrame so per-batch id sets never leave the
-          cluster): the batch's MEASURED size decides
-          the strategy (plans/advisor.advise_relation — the ANALYZE
-          consumer). A batch whose query vectors fit the session's
-          broadcast threshold broadcasts against one corpus pass —
-          exact top-k, zero shuffles of the corpus side. A batch too
-          big to broadcast (a backlog replay) would make the
-          nested-loop quadratic AND overflow the broadcast, so it
-          falls back to the banded-LSH index path below, restricted to
-          the batch's sources. This is a logical-plan switch AQE
-          cannot make at runtime — hence the explicit measurement.
+          reference actually runs): the ids come to the driver, a list
+          as is and a single-column DataFrame by one collect, and
+          their count decides the path (``advise_rowcount`` against
+          the session's broadcast threshold). A batch under it is
+          ranked exactly on the driver over the chunk index: each new
+          document against every document, scores ``==`` the Spark
+          ``cosine``, ties by target id, null scores last. No Spark
+          job beyond that collect; the rows come back as an
+          Arrow-backed local relation (``schemas.CONTRADICTION_PAIRS``).
+          A batch over it (a backlog replay) takes the banded-LSH
+          index path below, restricted to the batch's sources.
         - corpus-wide sweep (``new_doc_ids=None``): banded SRP-LSH
           candidate pairs (the AND-OR construction from
           functions/lsh.py) then per-source top-k within candidates.
@@ -1075,6 +1034,28 @@ class HiveEngine:
         from pyspark.sql import Window
 
         from the_hive_spark.functions.lsh import lsh_near_dup_candidates
+        from the_hive_spark.plans.advisor import advise_rowcount
+
+        batch_ids: DataFrame | None = None
+        if new_doc_ids is not None:
+            ids = _on_driver(new_doc_ids)
+            # float vectors dominate the row (4 B/component) plus
+            # id/flag overhead
+            decision = advise_rowcount(
+                self.spark, len(ids), bytes_per_row=64 + 4 * self.embedding_dim
+            )
+            # the path (exact driver ranking vs banded LSH index) is
+            # invisible in the result rows; log it so a backlog
+            # replay's approximate output is distinguishable
+            _LOG.info("contradiction_candidates batch path: %r", decision)
+            if decision.broadcast:
+                return self._contradiction_pairs(ids, top_k)
+            # a distributed relation, not an isin literal: an O(batch)
+            # IN expression blows up plan/codegen at exactly the batch
+            # sizes this path exists for
+            batch_ids = new_doc_ids if isinstance(new_doc_ids, DataFrame) else (
+                self.spark.createDataFrame([(i,) for i in ids], "document_id string")
+            )
 
         doc_vecs = (
             self.read_table("chunks")
@@ -1086,112 +1067,42 @@ class HiveEngine:
             )
         )
         flags = doc_vecs.select("document_id", "_alert")
-
-        exact_batch = False
-        batch_ids: DataFrame | None = None
-        if new_doc_ids is not None:
-            from the_hive_spark.plans.advisor import (
-                advise_relation,
-                advise_rowcount,
+        cand = lsh_near_dup_candidates(
+            doc_vecs.select("document_id", "embedding"),
+            id_col="document_id",
+            vec_col="embedding",
+            n_planes=n_planes,
+            n_bands=n_bands,
+        )
+        undirected = cand.withColumn("score", cosine("vec_a", "vec_b")).select(
+            "id_a", "id_b", "score"
+        )
+        directed = undirected.union(
+            undirected.select(
+                F.col("id_b").alias("id_a"),
+                F.col("id_a").alias("id_b"),
+                "score",
             )
-
-            if isinstance(new_doc_ids, DataFrame):
-                batch_ids = new_doc_ids
-                # ids already live on the cluster: the count is the
-                # ANALYZE cost (one tiny aggregate) advise_relation
-                # exists to pay before an expensive plan choice
-                decision = advise_relation(
-                    new_doc_ids, bytes_per_row=64 + 4 * self.embedding_dim
-                )
-            else:
-                # stats pick the strategy: float vectors dominate the
-                # row (4 B/component) plus id/flag overhead.
-                # len(new_doc_ids) is a free driver-side upper bound —
-                # counting would scan the chunks table once per ingest
-                # batch just to learn a number the caller holds
-                decision = advise_rowcount(
-                    self.spark,
-                    len(new_doc_ids),
-                    bytes_per_row=64 + 4 * self.embedding_dim,
-                )
-                if not decision.broadcast:
-                    # too big for an isin literal too (an O(batch)
-                    # driver-built IN expression blows up plan/codegen
-                    # at exactly the batch sizes this branch exists
-                    # for) — ship the ids as a distributed relation
-                    batch_ids = self.spark.createDataFrame(
-                        [(i,) for i in new_doc_ids], "document_id string"
-                    )
-            # the chosen LOGICAL plan (exact broadcast top-k vs banded
-            # LSH index) is invisible in the result rows; log it so a
-            # backlog replay's approximate output is distinguishable
-            _LOG.info("contradiction_candidates batch path: %r", decision)
-            exact_batch = decision.broadcast
-            q = _restrict_to_ids(
-                doc_vecs, "document_id", new_doc_ids
-                if batch_ids is None else batch_ids
-            ).select(
-                F.col("document_id").alias("source_doc_id"),
-                F.col("embedding").alias("qvec"),
-                F.col("_alert").alias("_alert_a"),
+        )
+        scored = (
+            directed.withColumnsRenamed(
+                {"id_a": "source_doc_id", "id_b": "target_doc_id"}
             )
-
-        if exact_batch:
-            # Broadcast the new batch; one pass over the corpus.
-            scored = (
-                doc_vecs.select(
-                    F.col("document_id").alias("target_doc_id"),
-                    "embedding",
-                    F.col("_alert").alias("_alert_b"),
-                )
-                .crossJoin(F.broadcast(q))
-                .filter(F.col("source_doc_id") != F.col("target_doc_id"))
-                .withColumn("score", cosine("qvec", "embedding"))
+            .join(
+                flags.withColumnsRenamed(
+                    {"document_id": "source_doc_id", "_alert": "_alert_a"}
+                ),
+                "source_doc_id",
             )
-        else:
-            cand = lsh_near_dup_candidates(
-                doc_vecs.select("document_id", "embedding"),
-                id_col="document_id",
-                vec_col="embedding",
-                n_planes=n_planes,
-                n_bands=n_bands,
+            .join(
+                flags.withColumnsRenamed(
+                    {"document_id": "target_doc_id", "_alert": "_alert_b"}
+                ),
+                "target_doc_id",
             )
-            undirected = cand.withColumn("score", cosine("vec_a", "vec_b")).select(
-                "id_a", "id_b", "score"
-            )
-            directed = undirected.union(
-                undirected.select(
-                    F.col("id_b").alias("id_a"),
-                    F.col("id_a").alias("id_b"),
-                    "score",
-                )
-            )
-            scored = (
-                directed.withColumnsRenamed(
-                    {"id_a": "source_doc_id", "id_b": "target_doc_id"}
-                )
-                .join(
-                    flags.withColumnsRenamed(
-                        {"document_id": "source_doc_id", "_alert": "_alert_a"}
-                    ),
-                    "source_doc_id",
-                )
-                .join(
-                    flags.withColumnsRenamed(
-                        {"document_id": "target_doc_id", "_alert": "_alert_b"}
-                    ),
-                    "target_doc_id",
-                )
-            )
-            if new_doc_ids is not None:
-                # too-big-to-broadcast batch: index path restricted to
-                # the batch's sources via LEFT SEMI join (batch_ids is
-                # always a DataFrame on this path — a driver isin
-                # literal would grow with the very batch size the
-                # fallback exists to survive)
-                scored = _restrict_to_ids(
-                    scored, "source_doc_id", batch_ids
-                )
+        )
+        if batch_ids is not None:
+            scored = _restrict_to_ids(scored, "source_doc_id", batch_ids)
 
         w = Window.partitionBy("source_doc_id").orderBy(
             F.desc("score"), F.asc("target_doc_id")
@@ -1206,6 +1117,39 @@ class HiveEngine:
                 (F.col("_alert_a") & F.col("_alert_b")).alias("contradicts"),
             )
         )
+
+    def _contradiction_pairs(self, ids: list[str], top_k: int) -> DataFrame:
+        """The exact batch path of ``contradiction_candidates``."""
+        rows, s, t, score, null = self._first_chunk_neighbors(ids, top_k)
+        # instr(upper(content), ALERT_KEYWORD) > 0, null for null content
+        u = np.union1d(s, t)
+        alert = dict(zip(u, (
+            c if c is None else ALERT_KEYWORD in c.upper()
+            for c in rows["content"].take(u).to_pylist()
+        )))
+        return self.spark.createDataFrame(pa.table([
+            rows["document_id"].take(s),
+            rows["document_id"].take(t),
+            pa.array(score, mask=null),
+            # SQL AND: false beats null, null beats true
+            [False if False in (alert[a], alert[b]) else alert[a] and alert[b]
+             for a, b in zip(s, t)],
+        ], schema=to_arrow_schema(schemas.CONTRADICTION_PAIRS)))
+
+    def _first_chunk_neighbors(self, ids: list[str] | None, top_k: int):
+        """The chunk index's rows, and for each document in ``ids``
+        (every document when None) its ``top_k`` nearest other
+        documents by the cosine of their first chunks: source row,
+        target row, score and null mask per pair (``_View.neighbors``)."""
+        view = self._on_live_files("chunks", self._chunk_index.view)
+        rows = view.data.rows
+        first = pc.fill_null(pc.equal(rows["chunk_index"], 0), False)
+        cand = np.flatnonzero(first.to_numpy(zero_copy_only=False))
+        src = cand
+        if ids is not None:
+            mine = pc.is_in(rows["document_id"].take(cand), pa.array(ids, pa.string()))
+            src = cand[mine.to_numpy(zero_copy_only=False)]
+        return rows, *view.neighbors(src, cand, top_k)
 
     def add_edge(
         self, src: str, dst: str, relationship: str, description: str = ""
@@ -1396,29 +1340,39 @@ class HiveEngine:
     ) -> None:
         self._audit([(client_ip, action, details, organization_id)])
 
+    def _local(self, schema: StructType, rows: list[tuple]) -> DataFrame:
+        """``rows`` as an Arrow-backed local relation of ``schema``,
+        nullability included: building or collecting it runs no Spark
+        job."""
+        arrow = to_arrow_schema(schema)
+        return self.spark.createDataFrame(pa.Table.from_pylist(
+            [dict(zip(arrow.names, r)) for r in rows], schema=arrow
+        ))
 
-def _restrict_to_ids(
-    df: DataFrame, col: str, ids: list[str] | DataFrame | None
-) -> DataFrame:
-    """Restrict ``df`` to rows whose ``col`` is in ``ids``.
 
-    List form → ``isin`` literal (explicit API arguments, tiny by
-    nature). DataFrame form → LEFT SEMI join on the ids' single
-    column — the scalable path for per-batch row sets: ids never
-    leave the cluster, AQE broadcasts the small side at runtime."""
+def _on_driver(ids: list[str] | DataFrame | None) -> list[str] | None:
+    """The distinct non-null ids of ``ids`` on the driver: None stays
+    None (every document), a list is taken as is, and a single-column
+    DataFrame is collected (one job; none for a local relation)."""
     if ids is None:
-        return df
+        return None
     if isinstance(ids, DataFrame):
-        # no distinct(): LEFT SEMI already emits each left row at most
-        # once whatever the right side's duplication — a pre-distinct
-        # is a whole extra shuffle per micro-batch for nothing
-        (id_col,) = ids.columns
-        return df.join(
-            ids.withColumnRenamed(id_col, col),
-            on=col,
-            how="left_semi",
-        )
-    return df.filter(F.col(col).isin(ids))
+        (col,) = ids.columns
+        ids = [r[col] for r in ids.collect()]
+    return [i for i in dict.fromkeys(ids) if i is not None]
+
+
+def _restrict_to_ids(df: DataFrame, col: str, ids: DataFrame) -> DataFrame:
+    """Restrict ``df`` to rows whose ``col`` is in the single-column
+    ``ids``, by LEFT SEMI join: the banded-LSH path's batch restriction,
+    for a batch too big for the driver-side exact path (which takes its
+    ids to the driver and reads the chunk index). AQE broadcasts the
+    small side at runtime."""
+    # no distinct(): LEFT SEMI already emits each left row at most once
+    # whatever the right side's duplication — a pre-distinct is a whole
+    # extra shuffle per micro-batch for nothing
+    (id_col,) = ids.columns
+    return df.join(ids.withColumnRenamed(id_col, col), on=col, how="left_semi")
 
 
 def _num_rows(root: str, rel: str) -> int:

@@ -87,38 +87,19 @@ class JoinDecision:
         )
 
 
-def advise_relation(
-    df: DataFrame, bytes_per_row: int = DEFAULT_BYTES_PER_ROW
-) -> JoinDecision:
-    """Runtime form of :func:`join_advice` for ONE concrete relation:
-    count it (a single tiny aggregate job — the ANALYZE cost, paid
-    once before the expensive join it informs) and compare the
-    estimated serialized size with the session's broadcast threshold.
-
-    This exists for decisions AQE cannot make: AQE can demote a
-    shuffle join to broadcast at runtime, but it can never swap one
-    LOGICAL plan for another — e.g. an exact broadcast nested-loop
-    top-k for a banded-LSH index pass. Callers that pick between such
-    plan *shapes* need the measurement up front.
-    """
-    spark = df.sparkSession
-    threshold = _broadcast_threshold_bytes(spark)
-    n = int(df.count())
-    est = n * bytes_per_row
-    return JoinDecision(est <= threshold, n, est, threshold)
-
-
 def advise_rowcount(
     spark, n: int, bytes_per_row: int = DEFAULT_BYTES_PER_ROW
 ) -> JoinDecision:
-    """:func:`advise_relation` when the caller already KNOWS a row
-    count (or a tight upper bound) driver-side — e.g. a per-batch id
-    list's length. Same decision law, zero cluster work: counting a
-    relation the caller can bound for free is an anti-pattern (it cost
-    a full chunks-table scan per ingest batch before this existed).
-    An upper bound is conservatively safe: it can only demote a
-    broadcast to the shuffle path, never broadcast something too
-    big."""
+    """Runtime form of :func:`join_advice` for one relation whose row
+    count (or a tight upper bound) the caller already holds on the
+    driver, e.g. a per-batch id list's length: compare the estimated
+    serialized size with the session's broadcast threshold. Zero
+    cluster work. It exists for decisions AQE cannot make: AQE can
+    demote a shuffle join to broadcast at runtime, but it can never
+    swap one plan shape for another, e.g. an exact driver-side top-k
+    for a banded-LSH index pass. An upper bound is conservatively safe:
+    it can only demote the small-side path, never pick it for something
+    too big."""
     threshold = _broadcast_threshold_bytes(spark)
     est = n * bytes_per_row
     return JoinDecision(est <= threshold, int(n), est, threshold)

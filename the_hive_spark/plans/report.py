@@ -126,11 +126,14 @@ def main() -> None:
             eng = HiveEngine(spark, tmp + "/wh", embedding_dim=16)
             eng.ingest_batch(seed_files(spark))
             some_doc = eng.read_table("documents").limit(1).collect()[0]["id"]
-            # search and chat rank on the driver over the chunk index
-            # and return local relations: there is no Spark plan to show
+            # search, chat and the contradiction batch path rank on the
+            # driver over the chunk index and return local relations:
+            # there is no Spark plan to show
             for name, fn in (
                 ("search", lambda: eng.search("alpha", audit=False)),
                 ("chat", lambda: eng.chat("alpha")),
+                ("contradiction_batch", lambda: eng.contradiction_candidates(
+                    new_doc_ids=[some_doc])),
             ):
                 n = len(fn().collect())
                 lines.append(
@@ -138,9 +141,6 @@ def main() -> None:
                     " chunk index, no Spark job) | | | | | | |"
                 )
             surface = {
-                "contradiction_batch": lambda: eng.contradiction_candidates(
-                    new_doc_ids=[some_doc]
-                ),
                 "contradiction_sweep": lambda: eng.contradiction_candidates(),
                 "integrity_report": lambda: eng.integrity_report(),
                 "timeline": lambda: eng.timeline(limit=20),

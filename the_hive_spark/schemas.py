@@ -252,3 +252,28 @@ CHAT_REPLY = StructType(
         StructField("answer", StringType(), False),
     ]
 )
+
+
+def _required(schema: StructType, names: set[str]) -> StructType:
+    """``schema`` with exactly the fields in ``names`` non-nullable."""
+    return StructType(
+        [StructField(f.name, f.dataType, f.name not in names) for f in schema.fields]
+    )
+
+
+# rule_matches rows HiveEngine.evaluate_rules (J3 single-doc) and
+# evaluate_rules_cross_doc (J4) return, built on the driver; the
+# literal columns are non-nullable, as in the Spark plans they replace
+SINGLE_DOC_MATCHES = _required(RULE_MATCHES, {"matched_doc", "match_type", "ai_explanation"})
+CROSS_DOC_MATCHES = _required(RULE_MATCHES, {"match_type", "ai_explanation", "organization_id"})
+
+# HiveEngine.contradiction_candidates rows (J2: a new document, one of
+# its top-k neighbors, their cosine and the both-alert flag)
+CONTRADICTION_PAIRS = StructType(
+    [
+        StructField("source_doc_id", StringType(), True),
+        StructField("target_doc_id", StringType(), True),
+        StructField("score", DoubleType(), True),
+        StructField("contradicts", BooleanType(), True),
+    ]
+)

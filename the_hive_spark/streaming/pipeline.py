@@ -23,10 +23,10 @@ def analyze_batch(engine: HiveEngine, completed: DataFrame) -> None:
 
     Scale note: a micro-batch is usually small, but on an
     ``availableNow`` backlog replay (the "process existing files"
-    path, S1) ONE batch is the entire backlog. So nothing here may be
-    proportional-to-batch-size on the driver: document ids stay in
-    DataFrames (semi-joined downstream, never ``collect()``-ed into an
-    ``isin`` literal). The events numbered here are one row per
+    path, S1) ONE batch is the entire backlog. So nothing here collects
+    a row set: document ids leave as a DataFrame, and only
+    ``evaluate_rules`` takes them to the driver, where the chunk index
+    it reads already holds every chunk. The events numbered here are one row per
     completed document, the same bound as ``ingest_batch``'s events and
     audit rows (one per file), and the same ``row_number`` over one
     window numbers them; it pins no checkpointed RDD.
@@ -66,9 +66,9 @@ def analyze_batch(engine: HiveEngine, completed: DataFrame) -> None:
         engine._append("alerts", alerts)
 
         # standing rules against the completed docs (J3 single-doc mode;
-        # chunks were upserted by the ingest leg of the pipeline) —
-        # restricted by semi-join on the batch's ids, not a driver list
-        if not engine.active_rules().isEmpty():
+        # chunks were upserted by the ingest leg of the pipeline); the
+        # rules are read by pyarrow, so the guard runs no Spark job
+        if engine.active_rule_rows():
             engine.evaluate_rules(document_ids=completed.select("document_id"))
     finally:
         # release the per-batch cache entry — CacheManager holds a
