@@ -523,10 +523,11 @@ def test_concurrent_audit_ids_dense_and_unique(spark, tmp_path):
 
 
 def test_python_rows_read_back_like_spark_rows(spark, tmp_path):
-    """The same rows committed as a DataFrame (Spark write) and as
-    Python rows (pyarrow write) read back identically and land in the
-    same partition directories: "" and None share Spark's default
-    partition, escaped values match, timestamps keep microseconds."""
+    """The same rows committed as a DataFrame (collected to Arrow by
+    Spark) and as Python rows (converted on the driver) read back
+    identically and land in the same partition directories: "" and None
+    share Spark's default partition, escaped values match, timestamps
+    keep microseconds."""
     import os
     from datetime import datetime, timedelta, timezone
 
@@ -578,6 +579,104 @@ def test_python_rows_read_back_like_spark_rows(spark, tmp_path):
     meta = pq.read_metadata(os.path.join(by_rows._path("audit_logs"), first))
     assert b"ARROW:schema" not in (meta.metadata or {})
     assert meta.row_group(0).column(0).statistics is not None
+
+
+def _live_files(eng, name):
+    import os
+
+    return [os.path.join(eng._path(name), f) for f in eng._manifest(name)["files"]]
+
+
+def test_chunk_files_share_one_parquet_schema(spark, tmp_path):
+    """Every live chunks file has one parquet schema, whichever commit
+    wrote it: an ingest, a shrinking update (new rows with the kept rows
+    of a rewritten file) and forget_document (kept rows alone). Files
+    rewritten from kept rows used to store every column as optional,
+    while ingest files stored document_id, chunk_index and tags as
+    required."""
+    import pyarrow.parquet as pq
+
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+
+    def schemas():
+        """The distinct parquet schemas of the live chunks files."""
+        found = []
+        for f in _live_files(eng, "chunks"):
+            schema = pq.read_metadata(f).schema
+            if not any(schema.equals(s) for s in found):
+                found.append(schema)
+        return len(found)
+
+    eng.ingest_batch(seed_files(spark))
+    eng.ingest_batch(spark.createDataFrame(
+        [("/watch/b_doc.txt", "Tenant b content here.", "orgB", None)], INGEST_FILES,
+    ))
+    assert schemas() == 1
+    eng.ingest_batch(spark.createDataFrame(
+        [("/watch/project_alpha.md", "Alpha, short.", "org1", None)], INGEST_FILES,
+    ))
+    assert schemas() == 1
+    assert eng.forget_document("/watch/beta_analysis.md")["chunks"] > 0
+    assert schemas() == 1
+
+
+def test_chunk_embeddings_have_no_dictionary(spark, tmp_path):
+    """Float vectors are written without a dictionary page (their values
+    do not repeat, so a dictionary only grows the file); other columns
+    keep theirs."""
+    import pyarrow.parquet as pq
+
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+    eng.ingest_batch(seed_files(spark))
+    for path in _live_files(eng, "chunks"):
+        group = pq.read_metadata(path).row_group(0)
+        encodings = {
+            group.column(i).path_in_schema: group.column(i).encodings
+            for i in range(group.num_columns)
+        }
+        assert not any("DICTIONARY" in e for e in encodings["embedding.list.element"])
+        assert "RLE_DICTIONARY" in encodings["document_id"]
+        assert "RLE_DICTIONARY" in encodings["tags.list.element"]
+
+
+def test_one_commit_writes_one_file_per_partition(spark, tmp_path):
+    """An ingest spanning 3 tenants, one of them "", adds exactly one
+    chunks file per tenant directory and one documents file, however
+    many tasks computed the rows. A predicate commit on events that
+    rewrites kept rows keeps their ids and leaves next_id unchanged:
+    only added rows advance it."""
+    import os
+
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+    orgs = ["orgA", "orgB", ""]
+    for batch in range(2):
+        files = spark.createDataFrame([
+            (f"/w/{batch}-{i}.md", f"Batch {batch} document {i}. It has text.",
+             orgs[i % 3], None)
+            for i in range(5)
+        ], INGEST_FILES).repartition(5)
+        before = {t: set(eng._manifest(t)["files"]) for t in ("chunks", "documents")}
+        assert eng.ingest_batch(files)["files"] == 5
+        added = {
+            t: set(eng._manifest(t)["files"]) - before[t] for t in before
+        }
+        assert sorted(os.path.dirname(f) for f in added["chunks"]) == [
+            "organization_id=__HIVE_DEFAULT_PARTITION__",
+            "organization_id=orgA",
+            "organization_id=orgB",
+        ]
+        assert len(added["documents"]) == 1
+
+    events = {r["document_name"]: r["id"] for r in eng.read_table("events").collect()}
+    assert sorted(events.values()) == list(range(1, 11))
+    next_id = eng._next_id("events")
+    assert len(eng._manifest("events")["files"]) == 2
+    assert eng._commit("events", drop=F.col("document_name") == "/w/0-2.md") == 1
+    del events["/w/0-2.md"]
+    assert {
+        r["document_name"]: r["id"] for r in eng.read_table("events").collect()
+    } == events
+    assert eng._next_id("events") == next_id
 
 
 def test_chat_persists_exactly_what_it_returns(spark, tmp_path):

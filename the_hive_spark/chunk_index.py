@@ -40,20 +40,18 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from the_hive_spark.schemas import CHUNKS
 
 # the chunk columns a hit returns, besides its tenant and score
 _COLS = ["id", "document_id", "content", "chunk_index", "tags"]
 _DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 # query-candidate pairs one fold covers (two float64 buffers of this size)
 _PAIR_BLOCK = 1 << 20
-# every file's rows, whichever write produced it (nullability differs)
+# the rows a file yields: its _COLS, then the tenant its directory names
 _SCHEMA = pa.schema([
-    ("id", pa.string()),
-    ("document_id", pa.string()),
-    ("content", pa.string()),
-    ("chunk_index", pa.int32()),
-    ("tags", pa.list_(pa.string())),
-    ("organization_id", pa.string()),
+    to_arrow_schema(CHUNKS).field(c) for c in _COLS + ["organization_id"]
 ])
 
 
@@ -183,7 +181,7 @@ class ChunkIndex:
         m[ok] = vals.to_numpy().reshape(-1, self.dim)
         rows = t.drop_columns(["embedding"]).append_column(
             "organization_id", pa.array([_tenant(rel)] * n, pa.string())
-        ).cast(_SCHEMA)
+        )
         return _Rows(
             rows, np.array(t.column("id").to_pylist(), dtype=str), m,
             np.sqrt(_fold(m, m)), ok, emb.is_valid().to_numpy(zero_copy_only=False),

@@ -17,13 +17,15 @@ pruning = tenancy, SURVEY.md §1.3). Every table write is one
 ``_commit``: drop rows by key or predicate, rewrite only the files that
 held them, append, and publish the new file list by atomically
 replacing the table's manifest (the Delta/Dremel commit shape, written
-out on the local filesystem). A commit stages a DataFrame with one Spark
-write, and rows already in driver memory (audit rows, chat messages)
-with ``pyarrow.parquet.write_table`` into the partition directory Spark
-would have chosen, so a one-row append runs no Spark job. ``events`` and
-``audit_logs`` keep ``next_id`` in their manifest: callers number added
-rows from 0 and the commit offsets them under the table lock, so ids stay
-dense and unique in commit order across threads and processes.
+out on the local filesystem). A commit's rows become one Arrow table
+(one Spark job collects a DataFrame; rows already in driver memory, such
+as audit rows and chat messages, take none) and pyarrow writes it as one
+file per partition directory, laid out as Spark lays out a partitioned
+table. ``events`` and ``audit_logs`` keep ``next_id`` in their manifest:
+callers number added rows from 0 and the commit offsets them under the
+table lock, so ids stay dense and unique in commit order across threads
+and processes. ``export_audit`` keeps Spark's writer: it exports files
+and commits to no table.
 
 Search and chat launch no Spark job: they rank on the driver from a
 ``chunk_index.ChunkIndex`` of the chunks table's live files, which loads
@@ -190,15 +192,17 @@ class HiveEngine:
         Column), then append ``add``: a DataFrame, or a list of Python
         rows in table column order, which is append-only. One probe query
         counts dropped rows per live file; only those files are
-        rewritten. Under a per-table lock, new files are staged, moved in
-        and published by atomically replacing the manifest. In a
-        _NUMBERED table ``add`` numbers its ids from 0: the commit offsets
-        them by the manifest's ``next_id`` and advances it by the rows
-        added, counted from the new files' footers. Files a commit
-        unpublishes are deleted by the next one, so a reader holding the
-        previous file list keeps working. Staged files with no rows are
-        not published, and a commit that then adds and drops nothing
-        leaves the manifest as it was. Returns the rows dropped."""
+        rewritten. The commit's rows (``add`` and the kept rows of the
+        rewritten files) become one Arrow table, collected by one Spark
+        job from a DataFrame or built on the driver from Python rows, and
+        ``_write`` writes it as one file per partition. Under a per-table
+        lock, the new files are published by atomically replacing the
+        manifest. In a _NUMBERED table ``add`` numbers its ids from 0: the
+        commit offsets them by the manifest's ``next_id`` and advances it
+        by the rows added. Files a commit unpublishes are deleted by the
+        next one, so a reader holding the previous file list keeps
+        working. A commit that adds and drops nothing leaves the manifest
+        as it was. Returns the rows dropped."""
         if isinstance(add, list) and drop is not None:
             raise ValueError("Python rows are append-only")
         root = self._path(name)
@@ -229,7 +233,7 @@ class HiveEngine:
                 if (n := _num_rows(root, f)) > hits[os.path.basename(f)]
             }
             if isinstance(add, list):  # append-only: nothing to rewrite
-                out = add
+                out = _rows_to_arrow(name, add)
             else:
                 parts = [] if add is None else [add]
                 if kept_rows:
@@ -241,8 +245,8 @@ class HiveEngine:
                 cols = _TABLE_SCHEMAS[name].fieldNames()
                 out = reduce(
                     DataFrame.unionByName, [p.select(*cols) for p in parts]
-                ) if parts else None
-            new = [] if out is None else self._stage_and_move(name, version, out)
+                ).toArrow() if parts else None
+            new = [] if out is None else self._write(name, version, out)
             if not new and not gone:  # nothing to publish
                 return 0
             state = {
@@ -251,7 +255,7 @@ class HiveEngine:
                 "unpublished": gone,
             }
             if name in _NUMBERED:
-                added = sum(_num_rows(root, f) for f in new) - sum(kept_rows.values())
+                added = (0 if out is None else out.num_rows) - sum(kept_rows.values())
                 state["next_id"] = cur["next_id"] + added
             tmp = os.path.join(root, _MANIFEST + ".tmp")
             with open(tmp, "w") as fh:
@@ -261,80 +265,45 @@ class HiveEngine:
                 os.remove(os.path.join(root, f))
         return sum(hits.values())
 
-    def _stage_and_move(
-        self, name: str, version: int, out: DataFrame | list[tuple]
-    ) -> list[str]:
-        """Write ``out`` into the table under names unique to this commit
-        and return their relative paths. Python rows are written by
-        pyarrow straight into the partition directory Spark would have
-        chosen; no reader sees them until the manifest names them. A
-        DataFrame is written by Spark to a hidden staging directory and
-        its files are moved in."""
-        if isinstance(out, list):
-            return self._write_rows(name, version, out)
-        root = self._path(name)
-        stage = os.path.join(root, f"_stage-{version}")
-        writer = out.write.mode("overwrite")
+    def _write(self, name: str, version: int, table: pa.Table) -> list[str]:
+        """Write ``table`` into the table as one parquet file per
+        partition directory, under names unique to this commit, and
+        return their relative paths; no reader sees them until the
+        manifest names them. The layout is Spark's: the partition column
+        lives in the directory name. Files carry no embedded Arrow schema
+        (``store_schema=False``), no text or list column statistics (long
+        text is most of a small file's min/max, and no reader prunes on
+        it) and no dictionary for float vectors, whose values do not
+        repeat."""
+        table = table.cast(to_arrow_schema(_TABLE_SCHEMAS[name]))
+        if not table.num_rows:
+            return []
+        parts = {"": table}
         if name in _ORG_PARTITIONED:
-            writer = writer.partitionBy("organization_id")
-        writer.parquet(stage)
-        moved: list[str] = []
-        for dirpath, _, names in os.walk(stage, topdown=False):
-            sub = os.path.relpath(dirpath, stage)
-            for n in names:
-                if n.endswith(".parquet") and _num_rows(dirpath, n):
-                    new = f"part-{version:05d}-{len(moved):05d}.parquet"
-                    rel = os.path.normpath(os.path.join(sub, new))
-                    os.makedirs(os.path.join(root, sub), exist_ok=True)
-                    os.rename(os.path.join(dirpath, n), os.path.join(root, rel))
-                    moved.append(rel)
-                else:
-                    os.remove(os.path.join(dirpath, n))
-            os.rmdir(dirpath)
-        return moved
-
-    def _write_rows(self, name: str, version: int, rows: list[tuple]) -> list[str]:
-        """One parquet file per partition of ``rows``, laid out and typed
-        as Spark writes them: the partition column lives in the directory
-        name, naive timestamps are local time, and the file carries no
-        embedded Arrow schema (``store_schema=False``) and no text or
-        list column statistics, to stay small."""
-        schema = _TABLE_SCHEMAS[name]
-        arrow = to_arrow_schema(schema)
-        org = (
-            schema.fieldNames().index("organization_id")
-            if name in _ORG_PARTITIONED else None
-        )
-        cols = [j for j in range(len(schema.fields)) if j != org]
-        groups: dict[str, list[tuple]] = {}
-        for r in rows:
-            groups.setdefault("" if org is None else _partition_dir(r[org]), []).append(r)
-        ts = {j for j in cols if isinstance(schema.fields[j].dataType, TimestampType)}
-        file_schema = pa.schema([arrow.field(j) for j in cols])
-        # min/max of long text is most of a small file, and no reader
-        # prunes on it: statistics only for ids, numbers and timestamps
-        stats_cols = [
-            f.name for f in file_schema
+            rows: dict[str, list[int]] = {}
+            for i, org in enumerate(table["organization_id"].to_pylist()):
+                rows.setdefault(_partition_dir(org), []).append(i)
+            table = table.drop_columns(["organization_id"])
+            parts = {sub: table.take(i) for sub, i in rows.items()}
+        stats = [
+            f.name for f in table.schema
             if not (pa.types.is_string(f.type) or pa.types.is_list(f.type))
         ]
-        root, moved = self._path(name), []
-        for sub, group in groups.items():
-            table = pa.Table.from_arrays([
-                pa.array(
-                    [r[j] and r[j].astimezone(timezone.utc) if j in ts else r[j]
-                     for r in group],
-                    arrow.field(j).type,
-                )
-                for j in cols
-            ], schema=file_schema)
-            rel = os.path.join(sub, f"part-{version:05d}-{len(moved):05d}.parquet")
+        dictionary = [
+            path for f in table.schema
+            if not (pa.types.is_list(f.type) and pa.types.is_floating(f.type.value_type))
+            for path in _leaf_paths(f.name, f.type)
+        ]
+        root, written = self._path(name), []
+        for sub, part in parts.items():
+            rel = os.path.join(sub, f"part-{version:05d}-{len(written):05d}.parquet")
             os.makedirs(os.path.join(root, sub), exist_ok=True)
             pq.write_table(
-                table, os.path.join(root, rel), store_schema=False,
-                write_statistics=stats_cols,
+                part, os.path.join(root, rel), store_schema=False,
+                write_statistics=stats, use_dictionary=dictionary,
             )
-            moved.append(rel)
-        return moved
+            written.append(rel)
+        return written
 
     def _append(self, name: str, df: DataFrame | list[tuple]) -> None:
         self._commit(name, df)
@@ -407,7 +376,7 @@ class HiveEngine:
 
             # deterministic ids (F3), embed (U1 mock provider) + fallback
             # keyword tags (U5/U4). Not cached: the UDFs run once per
-            # chunk, inside the chunks commit's write
+            # chunk, inside the chunks commit's collect
             tags = F.array_compact(F.array(*[
                 F.when(F.instr(F.lower("content"), kw) > 0, F.lit(f"#{kw}"))
                 for kw in TAG_FALLBACK_KEYWORDS
@@ -1377,6 +1346,35 @@ def _restrict_to_ids(df: DataFrame, col: str, ids: DataFrame) -> DataFrame:
 
 def _num_rows(root: str, rel: str) -> int:
     return pq.read_metadata(os.path.join(root, rel)).num_rows
+
+
+def _rows_to_arrow(name: str, rows: list[tuple]) -> pa.Table:
+    """Python rows in table column order as an Arrow table of the
+    table's schema; naive timestamps are local time, as Spark reads
+    them."""
+    schema = _TABLE_SCHEMAS[name]
+    arrow = to_arrow_schema(schema)
+    ts = {j for j, f in enumerate(schema.fields) if isinstance(f.dataType, TimestampType)}
+    return pa.Table.from_arrays([
+        pa.array(
+            [r[j] and r[j].astimezone(timezone.utc) if j in ts else r[j] for r in rows],
+            arrow.field(j).type,
+        )
+        for j in range(len(arrow))
+    ], schema=arrow)
+
+
+def _leaf_paths(name: str, t: pa.DataType) -> list[str]:
+    """The parquet column paths of an Arrow field, as pyarrow names the
+    leaves of nested types."""
+    if pa.types.is_map(t):
+        return (_leaf_paths(f"{name}.key_value.key", t.key_type)
+                + _leaf_paths(f"{name}.key_value.value", t.item_type))
+    if pa.types.is_list(t):
+        return _leaf_paths(f"{name}.list.element", t.value_type)
+    if pa.types.is_struct(t):
+        return [p for f in t for p in _leaf_paths(f"{name}.{f.name}", f.type)]
+    return [name]
 
 
 def _offset_ids(add: DataFrame | list[tuple], base: int) -> DataFrame | list[tuple]:
