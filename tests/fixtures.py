@@ -58,3 +58,14 @@ def seed_files(spark, org: str = "org1"):
         for name, text in SEED_DOCS.items()
     ]
     return spark.createDataFrame(rows, INGEST_FILES)
+
+
+def jobs_in(spark, group, fn) -> int:
+    """Spark jobs ``fn`` launches, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -1,13 +1,18 @@
-"""The Spark plans the analyst reactions ran before they read the chunk
-index on the driver, kept as the references the driver-side rows must
-equal (rows, scores with ``==``, and schema)."""
+"""The Spark plans that driver-side code replaced, kept as the
+references its results must equal: the analyst reactions, which now read
+the chunk index (rows, scores with ``==``, and schema), and the key
+probe of a table commit, which now reads the live files with pyarrow."""
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from the_hive_spark.engine import (
+    _TABLE_SCHEMAS,
     ALERT_KEYWORD,
     CROSS_DOC_KEYWORDS,
     RULE_FALLBACK_KEYWORDS,
@@ -156,3 +161,27 @@ def spark_cross_doc_matches(eng, document_ids=None, top_k: int = 10) -> DataFram
             F.lit("").alias("organization_id"),
         )
     )
+
+
+def spark_key_hits(eng, name: str, files: list[str], keys):
+    """``HiveEngine._key_hits`` as a Spark plan, the probe a key-scoped
+    commit ran before: a left semi join of the live files to the keys
+    counts each file's hits, and a left anti join of the files that keep
+    some rows gives those rows."""
+    if not files:
+        return {}, []
+    cols = keys.column_names
+    add = eng.spark.createDataFrame(keys)
+    live = eng._scan(name, files).withColumn("_file", F.col("_metadata.file_name"))
+    by_name = dict(live.join(add, cols, "left_semi").groupBy("_file").count().collect())
+    hits = {
+        f: by_name[os.path.basename(f)] for f in files if os.path.basename(f) in by_name
+    }
+    rewrite = [
+        f for f, n in hits.items()
+        if pq.read_metadata(os.path.join(eng._path(name), f)).num_rows > n
+    ]
+    if not rewrite:
+        return hits, []
+    kept = eng._scan(name, rewrite).join(add, cols, "left_anti")
+    return hits, [kept.select(*_TABLE_SCHEMAS[name].fieldNames()).toArrow()]

@@ -13,6 +13,7 @@ from tests.fixtures import (
     ALERT_RULE,
     CONFIDENTIAL_DOC,
     GOLDEN_QUERIES,
+    jobs_in,
     seed_files,
 )
 
@@ -1189,3 +1190,163 @@ def test_rule_matches_equal_the_spark_aggregate(spark, reaction_engine):
         "/r/late.md", "/r/umlaut.txt", "/r/upper.txt", "/r/shared.txt",
         "/r/nullfirst.txt", "/r/shuffled.txt", "/watch/project_alpha.md",
     }
+
+
+def test_key_probe_equals_the_spark_join(spark, tmp_path):
+    """A key-scoped commit probes the live files' key columns with
+    pyarrow. Every upsert leaves the same manifest, the same files with
+    the same rows and the same dropped-row count as the Spark semi-join
+    and anti-join probe it replaced (``tests/reference_plans.py``): for
+    documents (map metadata), chunks over tenants "", None, "a/b" and
+    "x=y" (tenants come back from the partition directory), logos (a
+    two-column key) and null keys on both sides, which drop nothing. A
+    file that loses every row is unpublished and not rewritten; a file
+    that loses some is rewritten without them."""
+    import os
+    from datetime import datetime, timezone
+
+    import pyarrow.parquet as pq
+
+    from tests.reference_plans import spark_key_hits
+
+    ts = datetime(2026, 1, 2, 3, 4, 5, tzinfo=timezone.utc)
+    driver = HiveEngine(spark, str(tmp_path / "driver"), embedding_dim=4)
+    ref = HiveEngine(spark, str(tmp_path / "spark"), embedding_dim=4)
+    ref._key_hits = lambda name, files, keys: spark_key_hits(ref, name, files, keys)
+
+    def doc(i, meta):
+        return (f"/d/{i}", f"{i}.md", ts, meta, "org1")
+
+    def chunk(d, i, org):
+        return (f"{d}-{i}", d, f"text {i}", i, ts, org, [0.5, float(i), 0.0, 1.0],
+                {"k": "v"}, ["#legal"])
+
+    def logo(org, name, body):
+        return (org, name, body, "image/png", len(body), ts)
+
+    tenants = ["", None, "a/b", "x=y"]
+    commits = [
+        ("documents", [doc(i, {"file_hash": f"h{i}", "n": str(i)}) for i in range(4)]),
+        # one of four rows: the file is rewritten with the other three
+        ("documents", [doc(1, {"file_hash": "new"}), doc(9, None)]),
+        ("chunks", [chunk(f"doc{j}", i, org) for j, org in enumerate(tenants)
+                    for i in range(3)] + [chunk(None, 7, ""), chunk(None, 8, "x=y")]),
+        # doc2 fills the a/b file: unpublished; doc0 shares the default
+        # partition with doc1 and a null document_id, and doc3 the x=y
+        # one with a null document_id: both rewritten; the null key
+        # drops nothing
+        ("chunks", [chunk("doc0", 0, ""), chunk("doc2", 5, "a/b"), chunk("doc3", 4, "x=y"),
+                    chunk(None, 9, "x=y")]),
+        ("logos", [logo("o1", "a", b"1"), logo("o1", "b", b"2"), logo("o2", "a", b"3")]),
+        ("logos", [logo("o1", "a", b"4"), logo("o2", "b", b"5")]),
+        # every live documents row: the file is unpublished, not rewritten
+        ("documents", [doc(i, {"v": "2"}) for i in (0, 1, 2, 3, 9)]),
+    ]
+    keys = {"documents": ["id"], "chunks": ["document_id"], "logos": ["organization_id", "name"]}
+
+    def state(eng, name):
+        m = eng._manifest(name)
+        files = {
+            f: sorted(map(repr, pq.ParquetFile(
+                os.path.join(eng._path(name), f)).read().to_pylist()))
+            for f in m["files"]
+        }
+        rows = sorted(map(repr, eng.read_table(name).collect()))
+        return m["version"], m["files"], m["unpublished"], files, rows
+
+    dropped = []
+    for name, rows in commits:
+        n = driver._commit(name, rows, keys[name])
+        assert ref._commit(name, rows, keys[name]) == n, name
+        assert state(driver, name) == state(ref, name), name
+        dropped.append(n)
+    assert dropped == [0, 1, 0, 9, 0, 1, 5]
+
+    def tenant_rows(eng):
+        return {
+            (r["document_id"], r["chunk_index"], r["organization_id"])
+            for r in eng.read_table("chunks").collect()
+        }
+
+    assert tenant_rows(driver) == {("doc1", i, None) for i in range(3)} | {
+        ("doc0", 0, None), ("doc2", 5, "a/b"), ("doc3", 4, "x=y"), (None, 7, None),
+        (None, 8, "x=y"), (None, 9, "x=y"),
+    }
+    chunk_state = driver._manifest("chunks")
+    assert sorted(chunk_state["unpublished"]) == [
+        "organization_id=__HIVE_DEFAULT_PARTITION__/part-00001-00000.parquet",
+        "organization_id=a%2Fb/part-00001-00001.parquet",
+        "organization_id=x%3Dy/part-00001-00002.parquet",
+    ]
+    by_dir = {os.path.dirname(f): f for f in chunk_state["files"] if "00002-" in f}
+    assert sorted(by_dir) == [
+        "organization_id=__HIVE_DEFAULT_PARTITION__", "organization_id=a%2Fb",
+        "organization_id=x%3Dy",
+    ]
+    assert pq.read_metadata(os.path.join(
+        driver._path("chunks"), by_dir["organization_id=a%2Fb"])).num_rows == 1
+    assert sorted(r["id"] for r in driver.read_table("documents").collect()) == [
+        f"/d/{i}" for i in (0, 1, 2, 3, 9)
+    ]
+    assert len(driver._manifest("documents")["files"]) == 1
+    logos = {(r["organization_id"], r["name"]): r["content"]
+             for r in driver.read_table("logos").collect()}
+    assert logos == {("o1", "a"): b"4", ("o1", "b"): b"2", ("o2", "a"): b"3",
+                     ("o2", "b"): b"5"}
+
+
+def test_all_changed_ingest_batch_job_count(spark, tmp_path):
+    """A 5-file batch whose every file changed runs at most 4 Spark jobs,
+    as an all-new one does: the per-file rows come from one collect, the
+    chunk rows from the chunks commit's toArrow, and both key-scoped
+    commits probe the live files with pyarrow. Each changed document
+    keeps only its new chunks, and its row records the new hash."""
+    import hashlib
+
+    from the_hive_spark.functions.chunkers import chunk_sentence_py
+
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+    paths = [f"/c/doc{i}.md" for i in range(5)]
+    v1 = {p: " ".join(f"Sentence {j} of {p} walks the walrus ledger line by line."
+                      for j in range(60)) for p in paths}
+    v2 = {p: f"{p} now holds one short sentence." for p in paths}
+
+    def batch(texts):
+        return spark.createDataFrame(
+            [(p, t, "org1", None) for p, t in texts.items()], INGEST_FILES
+        )
+
+    assert eng.ingest_batch(batch(v1))["files"] == 5
+    assert eng.read_table("chunks").count() > 5
+    stats = {}
+    jobs = jobs_in(spark, "ingest_all_changed", lambda: stats.update(
+        eng.ingest_batch(batch(v2))))
+    assert stats == {"files": 5, "chunks": 5, "alerts": 0}
+    assert jobs <= 4, jobs
+    chunks = {(r["document_id"], r["chunk_index"], r["content"])
+              for r in eng.read_table("chunks").collect()}
+    assert chunks == {
+        (p, i, c) for p, t in v2.items() for i, c in enumerate(chunk_sentence_py(t))
+    }
+    hashes = {r["id"]: r["metadata"]["file_hash"]
+              for r in eng.read_table("documents").collect()}
+    assert hashes == {p: hashlib.sha256(t.encode()).hexdigest() for p, t in v2.items()}
+    updates = eng.read_table("events").filter(F.col("event_type") == "update")
+    assert sorted(r["document_name"] for r in updates.collect()) == paths
+
+
+def test_keyed_registry_upserts_run_one_job(spark, tmp_path):
+    """add_rule and create_user run at most one Spark job each, the
+    toArrow of their one-row DataFrame: the key probe reads the live
+    files with pyarrow and the audit row is written with pyarrow. A
+    second call with the same key replaces the row."""
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+    for query in ("flag pricing", "flag secrets"):
+        assert jobs_in(spark, f"add_rule {query}", lambda: eng.add_rule(7, query)) <= 1
+    assert [(r["id"], r["query"]) for r in eng.read_table("rules").collect()] == [
+        (7, "flag secrets")
+    ]
+    for role in ("viewer", "admin"):
+        assert jobs_in(spark, f"create_user {role}", lambda: eng.create_user(
+            "ann@example.com", role=role)) <= 1
+    assert [r["role"] for r in eng.read_table("users").collect()] == ["admin"]

@@ -30,7 +30,7 @@ from the_hive_spark.plans.inspect import (
     plan_summary,
 )
 from the_hive_spark.registry import QUERIES, load_all
-from tests.fixtures import seed_files
+from tests.fixtures import jobs_in, seed_files
 
 load_all()
 
@@ -146,28 +146,17 @@ def test_table_read_cost_flat_in_live_file_count(spark, tmp_path):
     assert count_jobs("read_cost_40") <= one_file
 
 
-def _jobs_in(spark, group, fn) -> int:
-    """Spark jobs ``fn`` launches, counted through a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_audit_append_launches_no_spark_job(spark, plan_engine):
     """The audit row is written by pyarrow and its id comes from the
     manifest: an audited search launches exactly the jobs of an
     unaudited one, and the append itself launches none."""
     search = lambda audit: plan_engine.search(  # noqa: E731
         "alpha", audit=audit).collect()
-    assert _jobs_in(spark, "search_audited", lambda: search(True)) == _jobs_in(
+    assert jobs_in(spark, "search_audited", lambda: search(True)) == jobs_in(
         spark, "search_unaudited", lambda: search(False))
-    assert _jobs_in(spark, "audit_row", lambda: plan_engine._audit_row(
+    assert jobs_in(spark, "audit_row", lambda: plan_engine._audit_row(
         "t", "SEARCH", "no job", "org1")) == 0
-    assert _jobs_in(spark, "next_id", lambda: plan_engine._next_id("audit_logs")) == 0
+    assert jobs_in(spark, "next_id", lambda: plan_engine._next_id("audit_logs")) == 0
 
 
 def test_engine_search_runs_no_spark_job(spark, plan_engine):
@@ -176,7 +165,7 @@ def test_engine_search_runs_no_spark_job(spark, plan_engine):
     collect launches a Spark job."""
     for audit in (True, False):
         hits = []
-        assert _jobs_in(spark, f"search_jobs_{audit}", lambda: hits.extend(
+        assert jobs_in(spark, f"search_jobs_{audit}", lambda: hits.extend(
             plan_engine.search("alpha", audit=audit).collect())) == 0
         assert len(hits) == 3
 
@@ -188,7 +177,7 @@ def test_engine_chat_runs_no_spark_job(spark, plan_engine):
     continued one."""
     for i, session in enumerate((None, "plan-s1", "plan-s1")):
         rows = []
-        assert _jobs_in(spark, f"chat_jobs_{i}", lambda: rows.extend(
+        assert jobs_in(spark, f"chat_jobs_{i}", lambda: rows.extend(
             plan_engine.chat("alpha", session_id=session).collect())) == 0
         assert len(rows[0]["citations"]) == 5
     history = plan_engine.chat_history("plan-s1").collect()
@@ -198,7 +187,7 @@ def test_engine_chat_runs_no_spark_job(spark, plan_engine):
 def test_engine_stats_runs_no_spark_job(spark, plan_engine):
     """stats() counts rows from file footers and the chunk index."""
     got = {}
-    assert _jobs_in(spark, "stats_jobs", lambda: got.update(plan_engine.stats())) == 0
+    assert jobs_in(spark, "stats_jobs", lambda: got.update(plan_engine.stats())) == 0
     assert got == {
         "total_chunks": plan_engine.read_table("chunks").count(),
         "total_vectors": plan_engine.read_table("chunks")
@@ -209,10 +198,13 @@ def test_engine_stats_runs_no_spark_job(spark, plan_engine):
 
 def test_all_new_ingest_batch_job_count(spark, tmp_path):
     """An all-new 5-file batch on a warm warehouse (one earlier batch)
-    runs at most 15 Spark jobs: one cached relation carries each file's
-    chunks, one aggregate over it gives every tally, and each commit
-    writes a projection of it. The batch ran 20 jobs when chunks were
-    cached a second time and counted per document by a join."""
+    runs at most 4 Spark jobs: one collect of the cached relation's
+    per-file rows (with the documents scan change detection joins) and
+    the chunks commit's toArrow. The tallies and the events, alerts,
+    audit and documents rows are built on the driver, and the key-scoped
+    commits probe the live files with pyarrow. The batch ran 15 jobs
+    when an aggregate gave the tallies, each commit wrote a projection
+    in Spark and the key probes were Spark joins, and 20 before that."""
     import pyspark.sql.functions as F
 
     eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
@@ -221,9 +213,9 @@ def test_all_new_ingest_batch_job_count(spark, tmp_path):
         "path", F.regexp_replace("path", "^/watch/", "/warm/")
     )
     stats = {}
-    jobs = _jobs_in(spark, "ingest_all_new", lambda: stats.update(eng.ingest_batch(new)))
+    jobs = jobs_in(spark, "ingest_all_new", lambda: stats.update(eng.ingest_batch(new)))
     assert stats["files"] == 5
-    assert jobs <= 15, jobs
+    assert jobs <= 4, jobs
 
 
 def test_engine_reactions_run_no_spark_job(spark, plan_engine):
@@ -245,13 +237,13 @@ def test_engine_reactions_run_no_spark_job(spark, plan_engine):
     }
     for name, react in reactions.items():
         rows, frame_rows = [], []
-        assert _jobs_in(spark, f"{name}_list", lambda: rows.extend(
+        assert jobs_in(spark, f"{name}_list", lambda: rows.extend(
             react(docs).collect())) == 0, name
-        assert _jobs_in(spark, f"{name}_frame", lambda: frame_rows.extend(
+        assert jobs_in(spark, f"{name}_frame", lambda: frame_rows.extend(
             react(frame).collect())) <= 1, name
         if name != "cross_doc":
             assert rows and frame_rows, name
-    assert _jobs_in(spark, "active_rule_rows", plan_engine.active_rule_rows) == 0
+    assert jobs_in(spark, "active_rule_rows", plan_engine.active_rule_rows) == 0
 
 
 def test_engine_contradiction_sweep_path_no_all_pairs(plan_engine):

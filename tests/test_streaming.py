@@ -93,6 +93,42 @@ def test_watch_ingests_backlog_then_increment(spark, dirs):
     assert eng.read_table("chunks").count() == n
 
 
+def test_watch_drains_a_backlog_in_bounded_triggers(spark, tmp_path, monkeypatch):
+    """With the files-per-trigger bound at 2, an availableNow backlog of
+    5 files drains in 3 micro-batches of 2, 2 and 1 files and leaves the
+    same documents and chunks rows as one trigger over the whole
+    backlog does."""
+    from the_hive_spark.streaming import watch as watch_mod
+
+    src = tmp_path / "watch"
+    src.mkdir()
+    for name, text in SEED_DOCS.items():
+        _write(str(src), name, text)
+
+    def drain(run: str):
+        eng = HiveEngine(spark, str(tmp_path / run / "wh"), embedding_dim=16)
+        q = watch(eng, str(src), str(tmp_path / run / "ckpt"))
+        q.awaitTermination(180)
+        docs = {
+            (r["id"], r["filename"], r["organization_id"], r["metadata"]["file_hash"])
+            for r in eng.read_table("documents").collect()
+        }
+        chunks = {
+            (r["id"], r["document_id"], r["content"], r["chunk_index"],
+             tuple(r["embedding"]), tuple(r["tags"]))
+            for r in eng.read_table("chunks").collect()
+        }
+        return [p["numInputRows"] for p in q.recentProgress], docs, chunks
+
+    one = drain("one")
+    monkeypatch.setattr(watch_mod, "MAX_FILES_PER_TRIGGER", 2)
+    bounded = drain("bounded")
+    assert one[0] == [5]
+    assert bounded[0] == [2, 2, 1]
+    assert len(one[1]) == 5 and one[2]
+    assert bounded[1:] == one[1:]
+
+
 def test_file_filters(spark):
     rows = [
         ("/d/ok.md", 10),

@@ -19,9 +19,13 @@ held them, append, and publish the new file list by atomically
 replacing the table's manifest (the Delta/Dremel commit shape, written
 out on the local filesystem). A commit's rows become one Arrow table
 (one Spark job collects a DataFrame; rows already in driver memory, such
-as audit rows and chat messages, take none) and pyarrow writes it as one
-file per partition directory, laid out as Spark lays out a partitioned
-table. ``events`` and ``audit_logs`` keep ``next_id`` in their manifest:
+as an ingest batch's per-file rows, audit rows and chat messages, take
+none) and pyarrow writes it as one file per partition directory, laid
+out as Spark lays out a partitioned table. A key-scoped commit (an
+upsert) finds the rows it replaces by reading the live files' key
+columns with pyarrow, so it runs no Spark job beyond collecting a
+DataFrame ``add``; an ingest batch runs at most four in all.
+``events`` and ``audit_logs`` keep ``next_id`` in their manifest:
 callers number added rows from 0 and the commit offsets them under the
 table lock, so ids stay dense and unique in commit order across threads
 and processes. ``export_audit`` keeps Spark's writer: it exports files
@@ -55,7 +59,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType, TimestampType
 
 from the_hive_spark import schemas
-from the_hive_spark.chunk_index import ChunkIndex
+from the_hive_spark.chunk_index import ChunkIndex, _tenant
 from the_hive_spark.functions.chunkers import chunk_sentence_udf
 from the_hive_spark.functions.embedding import bow_embedding_np, make_embedder
 from the_hive_spark.functions.ids import sha256_hex, uuid5_chunk_id
@@ -190,72 +194,69 @@ class HiveEngine:
         """The one table write: drop rows sharing a key with ``add``
         (``drop`` = key columns) or matching a predicate (``drop`` =
         Column), then append ``add``: a DataFrame, or a list of Python
-        rows in table column order, which is append-only. One probe query
-        counts dropped rows per live file; only those files are
-        rewritten. The commit's rows (``add`` and the kept rows of the
-        rewritten files) become one Arrow table, collected by one Spark
-        job from a DataFrame or built on the driver from Python rows, and
-        ``_write`` writes it as one file per partition. Under a per-table
-        lock, the new files are published by atomically replacing the
-        manifest. In a _NUMBERED table ``add`` numbers its ids from 0: the
-        commit offsets them by the manifest's ``next_id`` and advances it
-        by the rows added. Files a commit unpublishes are deleted by the
+        rows in table column order. Only the live files that lose rows
+        are unpublished, and a file that keeps some is rewritten with
+        them. A key drop first turns ``add`` into its Arrow table (one
+        ``toArrow`` job for a DataFrame, none for rows) and probes the
+        live files' key columns with pyarrow (``_key_hits``): no Spark
+        job. A predicate drop counts its hits per file with one Spark
+        query and collects ``add`` with the kept rows in one ``toArrow``.
+        ``_write`` writes the commit's rows (``add`` and the kept rows)
+        as one file per partition. Under a per-table lock, the new files
+        are published by atomically replacing the manifest. In a
+        _NUMBERED table ``add`` numbers its ids from 0: the commit
+        offsets them by the manifest's ``next_id`` and advances it by
+        the rows added. Files a commit unpublishes are deleted by the
         next one, so a reader holding the previous file list keeps
         working. A commit that adds and drops nothing leaves the manifest
         as it was. Returns the rows dropped."""
-        if isinstance(add, list) and drop is not None:
-            raise ValueError("Python rows are append-only")
+        by_key = isinstance(drop, list)
+        if isinstance(add, list) or by_key:
+            add = _to_arrow(name, add)
         root = self._path(name)
         os.makedirs(root, exist_ok=True)
         with open(os.path.join(root, "_lock"), "a") as lock:
             fcntl.flock(lock, fcntl.LOCK_EX)
             cur = self._manifest(name)
-            version, hits = cur["version"] + 1, {}
-            by_key = isinstance(drop, list)
-            if isinstance(drop, Column):
-                drop = F.coalesce(drop, F.lit(False))
-            if drop is not None and cur["files"]:
-                live = self._scan(name, cur["files"]).withColumn(
-                    "_file", F.col("_metadata.file_name")
-                )
-                doomed = (
-                    live.join(add.select(*drop), drop, "left_semi") if by_key
-                    else live.filter(drop)
-                )
-                hits = dict(doomed.groupBy("_file").count().collect())
+            version, hits, kept = cur["version"] + 1, {}, []
             if name in _NUMBERED and add is not None:
                 add = _offset_ids(add, cur["next_id"])
-            gone = [f for f in cur["files"] if os.path.basename(f) in hits]
-            # a file that loses only some rows is rewritten without them
-            kept_rows = {
-                f: n - hits[os.path.basename(f)]
-                for f in gone
-                if (n := _num_rows(root, f)) > hits[os.path.basename(f)]
-            }
-            if isinstance(add, list):  # append-only: nothing to rewrite
-                out = _rows_to_arrow(name, add)
-            else:
-                parts = [] if add is None else [add]
-                if kept_rows:
-                    kept = self._scan(name, list(kept_rows))
-                    parts.append(
-                        kept.join(add.select(*drop), drop, "left_anti") if by_key
-                        else kept.filter(~drop)
-                    )
+            if by_key:
+                hits, kept = self._key_hits(name, cur["files"], add.select(drop))
+            elif drop is not None and cur["files"]:
+                drop = F.coalesce(drop, F.lit(False))
+                by_name = dict(
+                    self._scan(name, cur["files"]).filter(drop)
+                    .groupBy(F.col("_metadata.file_name")).count().collect()
+                )
+                hits = {
+                    f: by_name[os.path.basename(f)]
+                    for f in cur["files"] if os.path.basename(f) in by_name
+                }
+                # a file that loses only some rows is rewritten without them
+                rewrite = [f for f, n in hits.items() if _num_rows(root, f) > n]
+                if rewrite:
+                    kept = [self._scan(name, rewrite).filter(~drop)]
+            frames = [p for p in (add, *kept) if isinstance(p, DataFrame)]
+            tables = [p for p in (add, *kept) if isinstance(p, pa.Table)]
+            if frames:
                 cols = _TABLE_SCHEMAS[name].fieldNames()
-                out = reduce(
-                    DataFrame.unionByName, [p.select(*cols) for p in parts]
-                ).toArrow() if parts else None
-            new = [] if out is None else self._write(name, version, out)
-            if not new and not gone:  # nothing to publish
+                tables.append(reduce(
+                    DataFrame.unionByName, [p.select(*cols) for p in frames]
+                ).toArrow())
+            new = self._write(name, version, tables) if tables else []
+            if not new and not hits:  # nothing to publish
                 return 0
+            gone = [f for f in cur["files"] if f in hits]
             state = {
                 "version": version,
                 "files": [f for f in cur["files"] if f not in gone] + new,
                 "unpublished": gone,
             }
             if name in _NUMBERED:
-                added = (0 if out is None else out.num_rows) - sum(kept_rows.values())
+                added = sum(t.num_rows for t in tables) - sum(
+                    _num_rows(root, f) - n for f, n in hits.items()
+                )
                 state["next_id"] = cur["next_id"] + added
             tmp = os.path.join(root, _MANIFEST + ".tmp")
             with open(tmp, "w") as fh:
@@ -265,8 +266,45 @@ class HiveEngine:
                 os.remove(os.path.join(root, f))
         return sum(hits.values())
 
-    def _write(self, name: str, version: int, table: pa.Table) -> list[str]:
-        """Write ``table`` into the table as one parquet file per
+    def _key_hits(
+        self, name: str, files: list[str], keys: pa.Table
+    ) -> tuple[dict[str, int], list[pa.Table]]:
+        """The rows of ``files`` whose key columns equal a row of
+        ``keys``, read by pyarrow: the number each file holds (files
+        without any are left out) and the other rows of each file that
+        holds some but not all, in table column order. A key with a null
+        column matches nothing, as in Spark's equi-join."""
+        cols = keys.column_names
+        keys = keys.drop_null().group_by(cols).aggregate([])
+        hits, kept = {}, []
+        for f in files if keys.num_rows else ():
+            rows = self._file_rows(name, f, cols)
+            rows = rows.append_column("_row", pa.array(np.arange(rows.num_rows)))
+            found = rows.join(keys, cols, join_type="left semi")["_row"]
+            if len(found):
+                hits[f] = len(found)
+            if 0 < len(found) < rows.num_rows:
+                hit = np.zeros(rows.num_rows, bool)
+                hit[found.to_numpy()] = True
+                kept.append(self._file_rows(name, f).filter(pa.array(~hit)))
+        return hits, kept
+
+    def _file_rows(self, name: str, rel: str, columns: list[str] | None = None) -> pa.Table:
+        """``columns`` (all when None) of one file of the table, in that
+        order; a partitioned table's tenant comes from the file's
+        directory, as Spark reads it."""
+        schema = to_arrow_schema(_TABLE_SCHEMAS[name])
+        columns = columns or schema.names
+        stored = [c for c in columns if not (name in _ORG_PARTITIONED and c == "organization_id")]
+        rows = pq.ParquetFile(os.path.join(self._path(name), rel)).read(columns=stored)
+        if len(stored) < len(columns):
+            rows = rows.append_column(schema.field("organization_id"), pa.array(
+                [_tenant(rel)] * rows.num_rows, pa.string()
+            ))
+        return rows.select(columns)
+
+    def _write(self, name: str, version: int, tables: list[pa.Table]) -> list[str]:
+        """Write ``tables`` into the table as one parquet file per
         partition directory, under names unique to this commit, and
         return their relative paths; no reader sees them until the
         manifest names them. The layout is Spark's: the partition column
@@ -275,7 +313,8 @@ class HiveEngine:
         text is most of a small file's min/max, and no reader prunes on
         it) and no dictionary for float vectors, whose values do not
         repeat."""
-        table = table.cast(to_arrow_schema(_TABLE_SCHEMAS[name]))
+        schema = to_arrow_schema(_TABLE_SCHEMAS[name])
+        table = pa.concat_tables([t.cast(schema) for t in tables])
         if not table.num_rows:
             return []
         parts = {"": table}
@@ -311,7 +350,7 @@ class HiveEngine:
     def _replace(self, name: str, df: DataFrame) -> None:
         self._commit(name, df, F.lit(True))
 
-    def _upsert(self, name: str, new: DataFrame, key_cols: list[str]) -> None:
+    def _upsert(self, name: str, new: DataFrame | list[tuple], key_cols: list[str]) -> None:
         self._commit(name, new, key_cols)
 
     # -------------------------------------------------------------- ingest
@@ -322,8 +361,16 @@ class HiveEngine:
 
         ``files``: (path, content, organization_id, metadata) rows.
         Returns per-stage row counts (A3 ingest tally).
+
+        The new and changed files, each with its chunks, are one cached
+        relation. One collect takes a row per file to the driver; the
+        tallies and the events, alerts, audit and documents rows are
+        built from those rows and committed with pyarrow. The chunk rows
+        are collected by the chunks commit. With the documents read that
+        change detection joins, a batch runs at most four Spark jobs.
+        The per-file rows are bounded by the batch (``streaming/watch``
+        caps a micro-batch at ``MAX_FILES_PER_TRIGGER`` files).
         """
-        now = F.current_timestamp()
         files = files.withColumn("file_hash", sha256_hex(F.col("content"))).withColumn(
             "metadata",
             F.map_concat(
@@ -361,17 +408,22 @@ class HiveEngine:
             )
             .cache()
         )
-        doc_chunks = F.size("_chunks")
-        # P7 alert: keyword on chunk 0 (hive_service.go:222-246); a
-        # document without chunks has no chunk 0
-        is_alert = F.instr(
-            F.upper(F.try_element_at("_chunks", F.lit(1))), ALERT_KEYWORD
-        ) > 0
         try:
-            n_fresh, n_chunks, n_alerts = fresh.agg(
-                F.count(F.lit(1)), F.sum(doc_chunks), F.count_if(is_alert)
-            ).first()
-            if n_fresh == 0:
+            # one row per new or changed file, with its chunk count and
+            # P7 alert flag (keyword on chunk 0, hive_service.go:222-246;
+            # a document without chunks has no chunk 0): the batch's one
+            # collect, from which the tallies and the events, alerts,
+            # audit and documents rows are built on the driver
+            per_file = fresh.select(
+                "path",
+                "organization_id",
+                "metadata",
+                "ingest_type",
+                F.size("_chunks").alias("n_chunks"),
+                (F.instr(F.upper(F.try_element_at("_chunks", F.lit(1))), ALERT_KEYWORD) > 0)
+                .alias("alert"),
+            ).collect()
+            if not per_file:
                 return {"files": 0, "chunks": 0, "alerts": 0}
 
             # deterministic ids (F3), embed (U1 mock provider) + fallback
@@ -391,7 +443,7 @@ class HiveEngine:
                 "document_id",
                 "content",
                 "chunk_index",
-                now.alias("created_at"),
+                F.current_timestamp().alias("created_at"),
                 "organization_id",
                 self._embed(F.col("content")).alias("embedding"),
                 "metadata",
@@ -400,54 +452,45 @@ class HiveEngine:
             # keyed by document: an update drops every old chunk of the doc
             self._upsert("chunks", chunk_rows, ["document_id"])
 
+            now = datetime.now(timezone.utc)
             # events: one ingest|update event per document with chunks
             # (events.go:36-62; the type reflects the ST2 new-vs-changed
-            # decision), numbered from 0 in document order over one
-            # window, as the batch's audit rows are; the commit offsets them
-            events = fresh.filter(doc_chunks > 0).select(
-                (F.row_number().over(_order_all("path")) - 1).alias("id"),
-                now.alias("timestamp"),
-                F.col("ingest_type").alias("event_type"),
-                F.col("path").alias("document_name"),
-                F.format_string("Ingested %d chunks", doc_chunks).alias("details"),
+            # decision), numbered from 0 in path order; the commit
+            # offsets them
+            with_chunks = sorted(
+                (r for r in per_file if (r.n_chunks or 0) > 0), key=lambda r: r.path
             )
-            self._append("events", events)
+            self._append("events", [
+                (i, now, r.ingest_type, r.path, f"Ingested {r.n_chunks} chunks")
+                for i, r in enumerate(with_chunks)
+            ])
 
-            if n_alerts:
-                self._append("alerts", fresh.filter(is_alert).select(
-                    now.alias("timestamp"),
-                    F.lit("ALERT").alias("alert_type"),
-                    F.format_string(
-                        "Document %s contains %s content",
-                        "path", F.lit(ALERT_KEYWORD),
-                    ).alias("message"),
-                    F.lit("warning").alias("level"),
-                    F.col("path").alias("document_id"),
-                    F.coalesce("organization_id", F.lit("")).alias("organization_id"),
-                ))
+            alerts = [
+                (now, "ALERT", f"Document {r.path} contains {ALERT_KEYWORD} content",
+                 "warning", r.path, r.organization_id or "")
+                for r in per_file if r.alert
+            ]
+            self._append("alerts", alerts)
 
-            # audit INGEST rows (audit_log.go:46-58)
-            self._audit(
-                fresh.select(
-                    F.lit("ingest").alias("client_ip"),
-                    F.lit("INGEST").alias("action"),
-                    F.format_string("Client ingested file [%s]", "path").alias("details"),
-                    F.coalesce("organization_id", F.lit("")).alias("organization_id"),
-                )
-            )
+            # audit INGEST rows (audit_log.go:46-58), numbered in details order
+            self._audit(sorted(
+                (("ingest", "INGEST", f"Client ingested file [{r.path}]",
+                  r.organization_id or "") for r in per_file),
+                key=lambda a: a[2],
+            ))
 
             # documents upsert (doc id = path, as ingest_handler.go:92-95)
             # commits last: it records the file's hash, so a batch that
             # fails before here is re-ingested when it is replayed
-            docs = fresh.select(
-                F.col("path").alias("id"),
-                F.element_at(F.split("path", "/"), -1).alias("filename"),
-                now.alias("uploaded_at"),
-                "metadata",
-                "organization_id",
-            )
-            self._upsert("documents", docs, ["id"])
-            return {"files": n_fresh, "chunks": n_chunks, "alerts": n_alerts}
+            self._upsert("documents", [
+                (r.path, r.path.rsplit("/", 1)[-1], now, r.metadata, r.organization_id)
+                for r in per_file
+            ], ["id"])
+            return {
+                "files": len(per_file),
+                "chunks": sum(r.n_chunks or 0 for r in per_file),
+                "alerts": len(alerts),
+            }
         finally:
             # release the cache, early return included: the cache
             # manager holds it for the life of the session otherwise
@@ -1286,23 +1329,11 @@ class HiveEngine:
         """The id the next commit to a _NUMBERED table starts at."""
         return self._manifest(name)["next_id"]
 
-    def _audit(self, rows: DataFrame | list[tuple]) -> None:
+    def _audit(self, rows: list[tuple]) -> None:
         """Append (client_ip, action, details, organization_id) rows,
-        numbered from 0 in ``details`` order (DataFrame) or list order;
-        the commit offsets the ids."""
-        if isinstance(rows, DataFrame):
-            out = rows.select(
-                (F.row_number().over(_order_all("details")) - 1).alias("id"),
-                F.current_timestamp().alias("timestamp"),
-                "client_ip",
-                "action",
-                "details",
-                "organization_id",
-            )
-        else:
-            now = datetime.now(timezone.utc)
-            out = [(i, now, *r) for i, r in enumerate(rows)]
-        self._append("audit_logs", out)
+        numbered from 0 in list order; the commit offsets the ids."""
+        now = datetime.now(timezone.utc)
+        self._append("audit_logs", [(i, now, *r) for i, r in enumerate(rows)])
 
     def _audit_row(
         self, client_ip: str, action: str, details: str, organization_id: str
@@ -1348,6 +1379,15 @@ def _num_rows(root: str, rel: str) -> int:
     return pq.read_metadata(os.path.join(root, rel)).num_rows
 
 
+def _to_arrow(name: str, add: DataFrame | list[tuple]) -> pa.Table:
+    """``add`` as an Arrow table of the table's schema: one ``toArrow``
+    job for a DataFrame, none for Python rows."""
+    if isinstance(add, list):
+        return _rows_to_arrow(name, add)
+    schema = to_arrow_schema(_TABLE_SCHEMAS[name])
+    return add.select(*schema.names).toArrow().cast(schema)
+
+
 def _rows_to_arrow(name: str, rows: list[tuple]) -> pa.Table:
     """Python rows in table column order as an Arrow table of the
     table's schema; naive timestamps are local time, as Spark reads
@@ -1377,12 +1417,12 @@ def _leaf_paths(name: str, t: pa.DataType) -> list[str]:
     return [name]
 
 
-def _offset_ids(add: DataFrame | list[tuple], base: int) -> DataFrame | list[tuple]:
+def _offset_ids(add: DataFrame | pa.Table, base: int) -> DataFrame | pa.Table:
     """``add`` with its 0-based ``id`` column shifted to start at ``base``
     ("id" is the first column of every _NUMBERED table)."""
     if isinstance(add, DataFrame):
         return add.withColumn("id", F.col("id").cast("long") + base)
-    return [(r[0] + base, *r[1:]) for r in add]
+    return add.set_column(0, "id", pc.add(add["id"], base))
 
 
 def _partition_dir(value: str | None) -> str:
@@ -1397,9 +1437,10 @@ def _partition_dir(value: str | None) -> str:
 
 def _order_all(col: str):
     """Single-partition ordering window — ONLY for inputs of one row per
-    file or document of a batch (an ingest batch's events and audit
-    rows, trigger-bounded micro-batches). Bulk paths use functions.ids.dense_sequential_ids
-    instead, which numbers rows without a single-partition stage."""
+    document of a trigger-bounded micro-batch (the completion events of
+    ``streaming/pipeline.analyze_batch``). Bulk paths use
+    functions.ids.dense_sequential_ids instead, which numbers rows
+    without a single-partition stage."""
     from pyspark.sql import Window
 
     return Window.orderBy(col)

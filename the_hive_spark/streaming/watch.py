@@ -27,6 +27,10 @@ TEMP_FILE_PATTERN = r"(~\$|\._).*|.*\.tmp$"
 SUPPORTED_EXTENSIONS = [
     "pdf", "docx", "txt", "md", "xlsx", "xls", "html", "htm", "eml",
 ]
+# files per micro-batch: an availableNow backlog drains in batches of at
+# most this many, which bounds ingest_batch's per-file rows and the
+# chunks Arrow table it collects on the driver
+MAX_FILES_PER_TRIGGER = 1000
 
 
 def file_filters(df: DataFrame, path_col: str = "path") -> DataFrame:
@@ -52,7 +56,8 @@ def watch(
 
     availableNow=True reproduces the drone's "process existing backlog
     then pick up new files" behavior (S1 processExistingFiles +
-    processEvents); False runs continuous micro-batches.
+    processEvents); False runs continuous micro-batches. Either way a
+    micro-batch holds at most ``MAX_FILES_PER_TRIGGER`` files.
     """
     # the binaryFile source's fixed schema (streaming requires it explicit)
     binary_schema = (
@@ -63,6 +68,7 @@ def watch(
         .schema(binary_schema)
         .option("pathGlobFilter", "*")
         .option("recursiveFileLookup", "true")
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .load(input_dir)
     )
     files = file_filters(stream).select(
