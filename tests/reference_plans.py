@@ -1,7 +1,8 @@
 """The Spark plans that driver-side code replaced, kept as the
 references its results must equal: the analyst reactions, which now read
-the chunk index (rows, scores with ``==``, and schema), and the key
-probe of a table commit, which now reads the live files with pyarrow."""
+the chunk index (rows, scores with ``==``, and schema), and the key and
+predicate probes of a table commit, which now read the live files with
+pyarrow."""
 
 from __future__ import annotations
 
@@ -164,10 +165,10 @@ def spark_cross_doc_matches(eng, document_ids=None, top_k: int = 10) -> DataFram
 
 
 def spark_key_hits(eng, name: str, files: list[str], keys):
-    """``HiveEngine._key_hits`` as a Spark plan, the probe a key-scoped
-    commit ran before: a left semi join of the live files to the keys
-    counts each file's hits, and a left anti join of the files that keep
-    some rows gives those rows."""
+    """``HiveEngine._probe`` of a table of keys as a Spark plan, the
+    probe a key-scoped commit ran before: a left semi join of the live
+    files to the keys counts each file's hits, and a left anti join of
+    the files that keep some rows gives those rows."""
     if not files:
         return {}, []
     cols = keys.column_names
@@ -184,4 +185,28 @@ def spark_key_hits(eng, name: str, files: list[str], keys):
     if not rewrite:
         return hits, []
     kept = eng._scan(name, rewrite).join(add, cols, "left_anti")
+    return hits, [kept.select(*_TABLE_SCHEMAS[name].fieldNames()).toArrow()]
+
+
+def spark_predicate_hits(eng, name: str, files: list[str], drop):
+    """``HiveEngine._probe`` of a predicate as the Spark plan a predicate
+    commit ran before: ``drop`` is the Spark ``Column`` (a null result
+    drops nothing), a ``groupBy`` of the matching rows by
+    ``_metadata.file_name`` counts each file's hits, and the files that
+    keep some rows give them filtered by its negation."""
+    if not files:
+        return {}, []
+    drop = F.coalesce(drop, F.lit(False))
+    live = eng._scan(name, files)
+    by_name = dict(live.filter(drop).groupBy(F.col("_metadata.file_name")).count().collect())
+    hits = {
+        f: by_name[os.path.basename(f)] for f in files if os.path.basename(f) in by_name
+    }
+    rewrite = [
+        f for f, n in hits.items()
+        if pq.read_metadata(os.path.join(eng._path(name), f)).num_rows > n
+    ]
+    if not rewrite:
+        return hits, []
+    kept = eng._scan(name, rewrite).filter(~drop)
     return hits, [kept.select(*_TABLE_SCHEMAS[name].fieldNames()).toArrow()]

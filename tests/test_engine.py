@@ -4,6 +4,7 @@ with the deterministic mock embedder)."""
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 import pytest
 
@@ -672,7 +673,7 @@ def test_one_commit_writes_one_file_per_partition(spark, tmp_path):
     assert sorted(events.values()) == list(range(1, 11))
     next_id = eng._next_id("events")
     assert len(eng._manifest("events")["files"]) == 2
-    assert eng._commit("events", drop=F.col("document_name") == "/w/0-2.md") == 1
+    assert eng._commit("events", drop=pc.field("document_name") == "/w/0-2.md") == 1
     del events["/w/0-2.md"]
     assert {
         r["document_name"]: r["id"] for r in eng.read_table("events").collect()
@@ -1212,7 +1213,10 @@ def test_key_probe_equals_the_spark_join(spark, tmp_path):
     ts = datetime(2026, 1, 2, 3, 4, 5, tzinfo=timezone.utc)
     driver = HiveEngine(spark, str(tmp_path / "driver"), embedding_dim=4)
     ref = HiveEngine(spark, str(tmp_path / "spark"), embedding_dim=4)
-    ref._key_hits = lambda name, files, keys: spark_key_hits(ref, name, files, keys)
+    probed = []
+    ref._probe = lambda name, files, keys: (
+        probed.append(name) or spark_key_hits(ref, name, files, keys)
+    )
 
     def doc(i, meta):
         return (f"/d/{i}", f"{i}.md", ts, meta, "org1")
@@ -1261,6 +1265,7 @@ def test_key_probe_equals_the_spark_join(spark, tmp_path):
         assert state(driver, name) == state(ref, name), name
         dropped.append(n)
     assert dropped == [0, 1, 0, 9, 0, 1, 5]
+    assert probed == [name for name, _ in commits]
 
     def tenant_rows(eng):
         return {
@@ -1350,3 +1355,146 @@ def test_keyed_registry_upserts_run_one_job(spark, tmp_path):
         assert jobs_in(spark, f"create_user {role}", lambda: eng.create_user(
             "ann@example.com", role=role)) <= 1
     assert [r["role"] for r in eng.read_table("users").collect()] == ["admin"]
+
+
+def test_predicate_probe_equals_the_spark_query(spark, tmp_path):
+    """A predicate commit finds its rows with the same pyarrow probe as
+    a key commit. Every drop leaves the same manifest, the same files
+    with the same rows and the same dropped-row count as the Spark
+    query it replaced (``tests/reference_plans.py``), given the Spark
+    ``Column`` each pyarrow expression stands for: tenants "", None,
+    "a/b" and "x=y" on chunks (read back from the partition directory,
+    where "" is null, so ``== ""`` hits no chunk but does hit documents),
+    forget_document's ORs with null columns on both sides (graph_edges'
+    doc ids are non-null by schema), a drop of every row, and one drop
+    that empties a file (unpublished) and partly hits another
+    (rewritten)."""
+    import os
+    from datetime import datetime, timezone
+
+    import pyarrow.parquet as pq
+
+    from tests.reference_plans import spark_predicate_hits
+
+    ts = datetime(2026, 1, 2, 3, 4, 5, tzinfo=timezone.utc)
+    driver = HiveEngine(spark, str(tmp_path / "driver"), embedding_dim=4)
+    ref = HiveEngine(spark, str(tmp_path / "spark"), embedding_dim=4)
+
+    def chunk(d, i, org):
+        return (f"{d}-{i}", d, f"text {i}", i, ts, org, [0.5, float(i), 0.0, 1.0],
+                {"k": "v"}, ["#legal"])
+
+    def match(up, down):
+        return (1, "q", up, down, "cross_doc", "YES", "")
+
+    appends = [
+        ("chunks", [chunk("docA", 0, ""), chunk("docA", 1, None), chunk("docB", 0, "a/b"),
+                    chunk("doc9", 0, "x=y"), chunk("docC", 0, "x=y")]),
+        ("chunks", [chunk("docD", 0, "a/b"), chunk("doc9", 1, "x=y"), chunk("doc9", 2, "x=y"),
+                    chunk("docE", 0, None)]),
+        ("documents", [(f"/d/{i}", f"{i}.md", ts, {"n": str(i)}, org)
+                       for i, org in enumerate(["", None, "org1", ""])]),
+        ("rule_matches", [match(u, m) for u, m in [
+            ("doc9", None), (None, "doc9"), (None, None), (None, "other"), ("other", None),
+            ("other", "other"),
+        ]]),
+        ("graph_edges", [(s, t, "references", "", ts) for s, t in [
+            ("doc9", "x"), ("x", "doc9"), ("x", "y"),
+        ]]),
+        ("events", [(i, ts, "ingest", f"/d/{i}", "") for i in range(3)]),
+    ]
+    org = pc.field("organization_id")
+    drops = [
+        ("chunks", org == "a/b", F.col("organization_id") == "a/b"),
+        ("chunks", org == "", F.col("organization_id") == ""),
+        ("documents", org == "", F.col("organization_id") == ""),
+        # doc9 fills the second x=y file and shares the first with docC
+        ("chunks", pc.field("document_id") == "doc9", F.col("document_id") == "doc9"),
+        ("chunks", org.is_null(), F.col("organization_id").isNull()),
+        ("rule_matches",
+         (pc.field("uploaded_doc") == "doc9") | (pc.field("matched_doc") == "doc9"),
+         (F.col("uploaded_doc") == "doc9") | (F.col("matched_doc") == "doc9")),
+        ("graph_edges",
+         (pc.field("source_doc_id") == "doc9") | (pc.field("target_doc_id") == "doc9"),
+         (F.col("source_doc_id") == "doc9") | (F.col("target_doc_id") == "doc9")),
+        ("events", pc.scalar(True), F.lit(True)),
+    ]
+
+    def spark_probe(name, files, drop):
+        column = next(col for _, expr, col in drops if expr.equals(drop))
+        return spark_predicate_hits(ref, name, files, column)
+
+    ref._probe = spark_probe
+
+    def state(eng, name):
+        files = {
+            f: sorted(map(repr, pq.ParquetFile(
+                os.path.join(eng._path(name), f)).read().to_pylist()))
+            for f in eng._manifest(name)["files"]
+        }
+        rows = sorted(map(repr, eng.read_table(name).collect()))
+        return eng._manifest(name), files, rows
+
+    for name, rows in appends:
+        driver._commit(name, rows)
+        ref._commit(name, rows)
+    dropped = []
+    for name, expr, _ in drops:
+        n = driver._commit(name, drop=expr)
+        assert ref._commit(name, drop=expr) == n, (name, str(expr))
+        assert state(driver, name) == state(ref, name), (name, str(expr))
+        dropped.append(n)
+    assert dropped == [2, 0, 2, 3, 3, 2, 2, 3]
+
+    chunks = driver._manifest("chunks")
+    assert len(chunks["files"]) == 1  # docC's rewritten x=y file
+    assert [r["document_id"] for r in driver.read_table("chunks").collect()] == ["docC"]
+    assert sorted((
+        (r["uploaded_doc"], r["matched_doc"]) for r in driver.read_table("rule_matches").collect()
+    ), key=repr) == sorted([(None, None), (None, "other"), ("other", None), ("other", "other")],
+                           key=repr)
+    assert driver.read_table("events").count() == 0
+    assert driver._next_id("events") == 4
+
+
+def test_changed_document_without_chunks_loses_its_chunks(spark, tmp_path):
+    """A changed document whose new text yields no chunks keeps none of
+    its old ones: the chunks commit drops every chunk of the batch's
+    paths, not only those of the paths that brought new chunks."""
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+
+    def ingest(text):
+        return eng.ingest_batch(spark.createDataFrame([("/w/a.md", text, "", None)], INGEST_FILES))
+
+    sentence = "The walrus ledger balances every quarter."
+    assert ingest(sentence) == {"files": 1, "chunks": 1, "alerts": 0}
+    assert [h["document_id"] for h in eng.search(sentence, audit=False).collect()] == ["/w/a.md"]
+    assert ingest("   ") == {"files": 1, "chunks": 0, "alerts": 0}
+    assert eng.read_table("chunks").filter(F.col("document_id") == "/w/a.md").count() == 0
+    assert all(h["document_id"] != "/w/a.md" for h in eng.search(sentence, audit=False).collect())
+    assert [r["n_orphans"] for r in eng.integrity_report().collect()] == [0] * 5
+
+
+def test_predicate_commits_run_no_spark_job(spark, tmp_path):
+    """Field updates, document erasure and tenant and full purges find
+    their rows with pyarrow and write with pyarrow: no Spark job."""
+    eng = HiveEngine(spark, str(tmp_path / "wh"), embedding_dim=16)
+    eng.ingest_batch(seed_files(spark, org="orgA"))
+    eng.ingest_batch(spark.createDataFrame(
+        [("/watch/b_doc.txt", "tenant b content here", "orgB", None)], INGEST_FILES
+    ))
+    key = eng.generate_api_key("drone-1")
+    user = eng.create_user("ann@example.com")
+    calls = {
+        "touch_api_key": lambda: eng.touch_api_key(key),
+        "set_user_role": lambda: eng.set_user_role(user, "admin"),
+        "forget_document": lambda: eng.forget_document("/watch/beta_analysis.md"),
+        "purge(org)": lambda: eng.purge("orgA"),
+        "purge()": eng.purge,
+    }
+    assert {name: jobs_in(spark, name, fn) for name, fn in calls.items()} == dict.fromkeys(
+        calls, 0
+    )
+    assert [r["role"] for r in eng.read_table("users").collect()] == ["admin"]
+    assert [r["last_seen_at"] is not None for r in eng.read_table("api_keys").collect()] == [True]
+    assert eng.read_table("chunks").count() == eng.read_table("documents").count() == 0

@@ -21,10 +21,11 @@ out on the local filesystem). A commit's rows become one Arrow table
 (one Spark job collects a DataFrame; rows already in driver memory, such
 as an ingest batch's per-file rows, audit rows and chat messages, take
 none) and pyarrow writes it as one file per partition directory, laid
-out as Spark lays out a partitioned table. A key-scoped commit (an
-upsert) finds the rows it replaces by reading the live files' key
-columns with pyarrow, so it runs no Spark job beyond collecting a
-DataFrame ``add``; an ingest batch runs at most four in all.
+out as Spark lays out a partitioned table. Every commit finds the rows
+it drops (by key, as an upsert does, or by predicate, as purge, erasure
+and field updates do) with one pyarrow scan of the live files, so it
+runs no Spark job beyond collecting a DataFrame ``add``; an ingest batch
+runs at most four in all.
 ``events`` and ``audit_logs`` keep ``next_id`` in their manifest:
 callers number added rows from 0 and the commit offsets them under the
 table lock, so ids stay dense and unique in commit order across threads
@@ -44,6 +45,7 @@ from __future__ import annotations
 import fcntl
 import json
 import logging
+import operator
 import os
 from datetime import datetime, timezone
 from functools import reduce
@@ -54,12 +56,12 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType, TimestampType
 
 from the_hive_spark import schemas
-from the_hive_spark.chunk_index import ChunkIndex, _tenant
+from the_hive_spark.chunk_index import ChunkIndex
 from the_hive_spark.functions.chunkers import chunk_sentence_udf
 from the_hive_spark.functions.embedding import bow_embedding_np, make_embedder
 from the_hive_spark.functions.ids import sha256_hex, uuid5_chunk_id
@@ -109,6 +111,9 @@ _ORG_PARTITIONED = {"chunks", "audit_logs"}
 _NUMBERED = {"events", "audit_logs"}
 # per-table list of live files (hidden from Spark's listing by the "_")
 _MANIFEST = "_manifest.json"
+# how a partitioned table's tenant is read back from its directory name:
+# percent-decoded, with __HIVE_DEFAULT_PARTITION__ as null (as Spark does)
+_TENANT_DIRS = ds.partitioning(pa.schema([("organization_id", pa.string())]), flavor="hive")
 # characters Spark percent-escapes in a partition directory name
 _PATH_ESCAPED = frozenset(map(chr, range(1, 32))) | set("\"#%'*/:=?[\\]^{\x7f")
 
@@ -165,13 +170,23 @@ class HiveEngine:
                     raise
                 cur = new
 
-    def _read_rows(self, name: str, columns: list[str], where: pc.Expression) -> list[dict]:
-        """``columns`` of the live rows matching ``where``, read by
-        pyarrow (a partition column is not among a file's columns)."""
+    def _read_rows(self, name: str, columns: list[str] | None,
+                   where: pc.Expression) -> list[dict]:
+        """``columns`` (all when None) of the live rows matching
+        ``where``, read by pyarrow."""
+        return self._on_live_files(name, lambda files: self._dataset(name, files).to_table(
+            columns=columns, filter=where).to_pylist())
+
+    def _dataset(self, name: str, files: list[str]) -> ds.Dataset:
+        """``files`` (relative paths) as one pyarrow dataset of the
+        table's Arrow schema; a partitioned table's tenant comes from the
+        file's directory, as Spark reads it."""
         root = self._path(name)
-        return self._on_live_files(name, lambda files: ds.dataset(
-            [os.path.join(root, f) for f in files], format="parquet"
-        ).to_table(columns=columns, filter=where).to_pylist() if files else [])
+        return ds.dataset(
+            [os.path.join(root, f) for f in files], to_arrow_schema(_TABLE_SCHEMAS[name]),
+            format="parquet", partition_base_dir=root,
+            partitioning=_TENANT_DIRS if name in _ORG_PARTITIONED else None,
+        )
 
     def _scan(self, name: str, files: list[str]) -> DataFrame:
         """Rows of ``files`` (relative paths). A directory read filtered
@@ -189,61 +204,39 @@ class HiveEngine:
         self,
         name: str,
         add: DataFrame | list[tuple] | None = None,
-        drop: list[str] | Column | None = None,
+        drop: list[str] | pc.Expression | None = None,
     ) -> int:
         """The one table write: drop rows sharing a key with ``add``
         (``drop`` = key columns) or matching a predicate (``drop`` =
-        Column), then append ``add``: a DataFrame, or a list of Python
-        rows in table column order. Only the live files that lose rows
-        are unpublished, and a file that keeps some is rewritten with
-        them. A key drop first turns ``add`` into its Arrow table (one
-        ``toArrow`` job for a DataFrame, none for rows) and probes the
-        live files' key columns with pyarrow (``_key_hits``): no Spark
-        job. A predicate drop counts its hits per file with one Spark
-        query and collects ``add`` with the kept rows in one ``toArrow``.
-        ``_write`` writes the commit's rows (``add`` and the kept rows)
-        as one file per partition. Under a per-table lock, the new files
-        are published by atomically replacing the manifest. In a
-        _NUMBERED table ``add`` numbers its ids from 0: the commit
-        offsets them by the manifest's ``next_id`` and advances it by
-        the rows added. Files a commit unpublishes are deleted by the
-        next one, so a reader holding the previous file list keeps
-        working. A commit that adds and drops nothing leaves the manifest
-        as it was. Returns the rows dropped."""
-        by_key = isinstance(drop, list)
-        if isinstance(add, list) or by_key:
+        pyarrow expression; a null result drops nothing), then append
+        ``add``: a DataFrame, or a list of Python rows in table column
+        order. ``add`` first becomes its Arrow table (one ``toArrow`` job
+        for a DataFrame, none for rows); the dropped rows are then found
+        by one pyarrow scan of the live files (``_probe``), with no Spark
+        job. Only the live files that lose rows are unpublished, and a
+        file that keeps some is rewritten with them. ``_write`` writes
+        the commit's rows (``add`` and the kept rows) as one file per
+        partition. Under a per-table lock, the new files are published by
+        atomically replacing the manifest. In a _NUMBERED table ``add``
+        numbers its ids from 0: the commit offsets them by the manifest's
+        ``next_id`` and advances it by the rows added. Files a commit
+        unpublishes are deleted by the next one, so a reader holding the
+        previous file list keeps working. A commit that adds and drops
+        nothing leaves the manifest as it was. Returns the rows dropped."""
+        if add is not None:
             add = _to_arrow(name, add)
+        if isinstance(drop, list):
+            drop = add.select(drop)
         root = self._path(name)
         os.makedirs(root, exist_ok=True)
         with open(os.path.join(root, "_lock"), "a") as lock:
             fcntl.flock(lock, fcntl.LOCK_EX)
             cur = self._manifest(name)
-            version, hits, kept = cur["version"] + 1, {}, []
+            version = cur["version"] + 1
             if name in _NUMBERED and add is not None:
                 add = _offset_ids(add, cur["next_id"])
-            if by_key:
-                hits, kept = self._key_hits(name, cur["files"], add.select(drop))
-            elif drop is not None and cur["files"]:
-                drop = F.coalesce(drop, F.lit(False))
-                by_name = dict(
-                    self._scan(name, cur["files"]).filter(drop)
-                    .groupBy(F.col("_metadata.file_name")).count().collect()
-                )
-                hits = {
-                    f: by_name[os.path.basename(f)]
-                    for f in cur["files"] if os.path.basename(f) in by_name
-                }
-                # a file that loses only some rows is rewritten without them
-                rewrite = [f for f, n in hits.items() if _num_rows(root, f) > n]
-                if rewrite:
-                    kept = [self._scan(name, rewrite).filter(~drop)]
-            frames = [p for p in (add, *kept) if isinstance(p, DataFrame)]
-            tables = [p for p in (add, *kept) if isinstance(p, pa.Table)]
-            if frames:
-                cols = _TABLE_SCHEMAS[name].fieldNames()
-                tables.append(reduce(
-                    DataFrame.unionByName, [p.select(*cols) for p in frames]
-                ).toArrow())
+            hits, kept = self._probe(name, cur["files"], drop) if drop is not None else ({}, [])
+            tables = [t for t in (add, *kept) if t is not None]
             new = self._write(name, version, tables) if tables else []
             if not new and not hits:  # nothing to publish
                 return 0
@@ -254,10 +247,7 @@ class HiveEngine:
                 "unpublished": gone,
             }
             if name in _NUMBERED:
-                added = sum(t.num_rows for t in tables) - sum(
-                    _num_rows(root, f) - n for f, n in hits.items()
-                )
-                state["next_id"] = cur["next_id"] + added
+                state["next_id"] = cur["next_id"] + (add.num_rows if add is not None else 0)
             tmp = os.path.join(root, _MANIFEST + ".tmp")
             with open(tmp, "w") as fh:
                 json.dump(state, fh)
@@ -266,42 +256,27 @@ class HiveEngine:
                 os.remove(os.path.join(root, f))
         return sum(hits.values())
 
-    def _key_hits(
-        self, name: str, files: list[str], keys: pa.Table
+    def _probe(
+        self, name: str, files: list[str], drop: pa.Table | pc.Expression
     ) -> tuple[dict[str, int], list[pa.Table]]:
-        """The rows of ``files`` whose key columns equal a row of
-        ``keys``, read by pyarrow: the number each file holds (files
-        without any are left out) and the other rows of each file that
-        holds some but not all, in table column order. A key with a null
-        column matches nothing, as in Spark's equi-join."""
-        cols = keys.column_names
-        keys = keys.drop_null().group_by(cols).aggregate([])
-        hits, kept = {}, []
-        for f in files if keys.num_rows else ():
-            rows = self._file_rows(name, f, cols)
-            rows = rows.append_column("_row", pa.array(np.arange(rows.num_rows)))
-            found = rows.join(keys, cols, join_type="left semi")["_row"]
-            if len(found):
-                hits[f] = len(found)
-            if 0 < len(found) < rows.num_rows:
-                hit = np.zeros(rows.num_rows, bool)
-                hit[found.to_numpy()] = True
-                kept.append(self._file_rows(name, f).filter(pa.array(~hit)))
+        """The rows of ``files`` that ``drop`` hits, read by pyarrow as
+        one dataset: the number each file holds (files without any are
+        left out) and the other rows of each file that holds some but not
+        all, in table column order. ``drop`` is a predicate or a table of
+        keys (``_key_filter``); a row it maps to null is kept, as Spark
+        keeps a row whose filter is null."""
+        if isinstance(drop, pa.Table):
+            drop = _key_filter(drop)
+        hit = pc.coalesce(drop, False)
+        live = self._dataset(name, files)
+        root, hits, kept = self._path(name), {}, []
+        for frag in live.get_fragments():
+            n = frag.scanner(schema=live.schema, filter=hit, columns=[]).count_rows()
+            if n:
+                hits[os.path.relpath(frag.path, root)] = n
+            if 0 < n < frag.metadata.num_rows:
+                kept.append(frag.to_table(schema=live.schema, filter=~hit))
         return hits, kept
-
-    def _file_rows(self, name: str, rel: str, columns: list[str] | None = None) -> pa.Table:
-        """``columns`` (all when None) of one file of the table, in that
-        order; a partitioned table's tenant comes from the file's
-        directory, as Spark reads it."""
-        schema = to_arrow_schema(_TABLE_SCHEMAS[name])
-        columns = columns or schema.names
-        stored = [c for c in columns if not (name in _ORG_PARTITIONED and c == "organization_id")]
-        rows = pq.ParquetFile(os.path.join(self._path(name), rel)).read(columns=stored)
-        if len(stored) < len(columns):
-            rows = rows.append_column(schema.field("organization_id"), pa.array(
-                [_tenant(rel)] * rows.num_rows, pa.string()
-            ))
-        return rows.select(columns)
 
     def _write(self, name: str, version: int, tables: list[pa.Table]) -> list[str]:
         """Write ``tables`` into the table as one parquet file per
@@ -348,10 +323,11 @@ class HiveEngine:
         self._commit(name, df)
 
     def _replace(self, name: str, df: DataFrame) -> None:
-        self._commit(name, df, F.lit(True))
+        self._commit(name, df, pc.scalar(True))
 
-    def _upsert(self, name: str, new: DataFrame | list[tuple], key_cols: list[str]) -> None:
-        self._commit(name, new, key_cols)
+    def _upsert(self, name: str, new: DataFrame | list[tuple],
+                drop: list[str] | pc.Expression) -> None:
+        self._commit(name, new, drop)
 
     # -------------------------------------------------------------- ingest
 
@@ -449,8 +425,10 @@ class HiveEngine:
                 "metadata",
                 F.slice(tags, 1, 5).alias("tags"),
             )
-            # keyed by document: an update drops every old chunk of the doc
-            self._upsert("chunks", chunk_rows, ["document_id"])
+            # keyed by the batch's paths: a changed document loses every
+            # old chunk, even when its new text yields none
+            paths = pc.field("document_id").isin([r.path for r in per_file])
+            self._upsert("chunks", chunk_rows, paths)
 
             now = datetime.now(timezone.utc)
             # events: one ingest|update event per document with chunks
@@ -756,12 +734,12 @@ class HiveEngine:
         return key
 
     def set_api_key_active(self, key: str, active: bool) -> None:
-        self._update("api_keys", F.col("key") == key, is_active=F.lit(active))
+        self._update("api_keys", pc.field("key") == key, is_active=active)
 
     def touch_api_key(self, key: str) -> None:
         """ST6 heartbeat: mark last_seen now (api_keys.go:276-310)."""
         self._update(
-            "api_keys", F.col("key") == key, last_seen_at=F.current_timestamp()
+            "api_keys", pc.field("key") == key, last_seen_at=datetime.now(timezone.utc)
         )
 
     def clients_status(self) -> DataFrame:
@@ -821,10 +799,10 @@ class HiveEngine:
     def set_user_role(self, user_id: str, role: str) -> None:
         if role not in self.ROLES:
             raise ValueError(f"unknown role {role!r}; expected one of {self.ROLES}")
-        self._update("users", F.col("user_id") == user_id, role=F.lit(role))
+        self._update("users", pc.field("user_id") == user_id, role=role)
 
     def set_user_active(self, user_id: str, active: bool) -> None:
-        self._update("users", F.col("user_id") == user_id, is_active=F.lit(active))
+        self._update("users", pc.field("user_id") == user_id, is_active=active)
 
     def users(self, organization_id: str | None = None) -> DataFrame:
         df = self.read_table("users")
@@ -1224,8 +1202,8 @@ class HiveEngine:
     def purge(self, organization_id: str | None = None) -> None:
         """S16: tenant purge = partition drop; full purge = table reset."""
         doomed = (
-            F.lit(True) if organization_id is None
-            else F.col("organization_id") == organization_id
+            pc.scalar(True) if organization_id is None
+            else pc.field("organization_id") == organization_id
         )
         for t in ("chunks", "documents"):
             self._commit(t, drop=doomed)
@@ -1289,17 +1267,18 @@ class HiveEngine:
         erasure (the one trace that legally should remain). Returns
         per-table deleted-row counts.
 
-        Each table is one predicate commit: its probe counts the rows
-        to delete, and only the files holding them are rewritten.
+        Each table is one predicate commit: its pyarrow probe counts the
+        rows to delete, and only the files holding them are rewritten; no
+        Spark job runs.
         """
         preds = {
-            "documents": F.col("id") == document_id,
-            "chunks": F.col("document_id") == document_id,
-            "alerts": F.col("document_id") == document_id,
-            "rule_matches": (F.col("uploaded_doc") == document_id)
-            | (F.col("matched_doc") == document_id),
-            "graph_edges": (F.col("source_doc_id") == document_id)
-            | (F.col("target_doc_id") == document_id),
+            "documents": pc.field("id") == document_id,
+            "chunks": pc.field("document_id") == document_id,
+            "alerts": pc.field("document_id") == document_id,
+            "rule_matches": (pc.field("uploaded_doc") == document_id)
+            | (pc.field("matched_doc") == document_id),
+            "graph_edges": (pc.field("source_doc_id") == document_id)
+            | (pc.field("target_doc_id") == document_id),
         }
         deleted = {tbl: self._commit(tbl, drop=pred) for tbl, pred in preds.items()}
         self._audit_row(
@@ -1320,10 +1299,12 @@ class HiveEngine:
 
     # ------------------------------------------------------------- helpers
 
-    def _update(self, name: str, where: Column, **values: Column) -> None:
-        """Set ``values`` on the rows of ``name`` matching ``where``."""
-        rows = self.read_table(name).filter(where).withColumns(values)
-        self._commit(name, rows, where)
+    def _update(self, name: str, where: pc.Expression, **values) -> None:
+        """Set ``values`` (Python values) on the rows of ``name``
+        matching ``where``; the rows are read by pyarrow and the commit
+        drops them by the same predicate: no Spark job."""
+        rows = self._read_rows(name, None, where)
+        self._commit(name, [tuple({**r, **values}.values()) for r in rows], where)
 
     def _next_id(self, name: str) -> int:
         """The id the next commit to a _NUMBERED table starts at."""
@@ -1404,6 +1385,20 @@ def _rows_to_arrow(name: str, rows: list[tuple]) -> pa.Table:
     ], schema=arrow)
 
 
+def _key_filter(keys: pa.Table) -> pc.Expression:
+    """The rows sharing a key with a row of ``keys``: ``isin`` over the
+    distinct keys of one column, else an OR over the keys of their
+    column equalities. A key with a null column matches nothing, as in
+    Spark's equi-join."""
+    keys = keys.drop_null().group_by(keys.column_names).aggregate([])
+    if keys.num_columns == 1:
+        return pc.field(keys.column_names[0]).isin(keys.column(0).combine_chunks())
+    return reduce(operator.or_, (
+        reduce(operator.and_, (pc.field(c) == v for c, v in key.items()))
+        for key in keys.to_pylist()
+    ), pc.scalar(False))
+
+
 def _leaf_paths(name: str, t: pa.DataType) -> list[str]:
     """The parquet column paths of an Arrow field, as pyarrow names the
     leaves of nested types."""
@@ -1417,11 +1412,9 @@ def _leaf_paths(name: str, t: pa.DataType) -> list[str]:
     return [name]
 
 
-def _offset_ids(add: DataFrame | pa.Table, base: int) -> DataFrame | pa.Table:
+def _offset_ids(add: pa.Table, base: int) -> pa.Table:
     """``add`` with its 0-based ``id`` column shifted to start at ``base``
     ("id" is the first column of every _NUMBERED table)."""
-    if isinstance(add, DataFrame):
-        return add.withColumn("id", F.col("id").cast("long") + base)
     return add.set_column(0, "id", pc.add(add["id"], base))
 
 
