@@ -84,11 +84,12 @@ class _View:
     ) -> tuple[pa.Table, np.ndarray, np.ndarray]:
         """The top ``k`` rows for query vector ``q`` (all tenants when
         ``organization_id`` is None), their scores and a mask of the
-        null ones."""
+        null ones. Tenant "" is the default partition's, which reads
+        back as null."""
         d = self.data
         s, e = (
             (0, len(d.ids)) if organization_id is None
-            else self.tenants.get(organization_id, (0, 0))
+            else self.tenants.get(organization_id or None, (0, 0))
         )
         q64 = q.astype(np.float64)
         den = d.norm[s:e] * np.sqrt(_fold(q64[None, :], q64)[0])

@@ -19,8 +19,8 @@ held them, append, and publish the new file list by atomically
 replacing the table's manifest (the Delta/Dremel commit shape, written
 out on the local filesystem). A commit's rows become one Arrow table
 (one Spark job collects a DataFrame; rows already in driver memory, such
-as an ingest batch's per-file rows, audit rows and chat messages, take
-none) and pyarrow writes it as one file per partition directory, laid
+as an ingest batch's per-file rows, audit rows, chat messages and
+registry rows, take none) and pyarrow writes it as one file per partition directory, laid
 out as Spark lays out a partitioned table. Every commit finds the rows
 it drops (by key, as an upsert does, or by predicate, as purge, erasure
 and field updates do) with one pyarrow scan of the live files, so it
@@ -47,6 +47,7 @@ import json
 import logging
 import operator
 import os
+from collections.abc import Callable
 from datetime import datetime, timezone
 from functools import reduce
 
@@ -177,6 +178,13 @@ class HiveEngine:
         return self._on_live_files(name, lambda files: self._dataset(name, files).to_table(
             columns=columns, filter=where).to_pylist())
 
+    def _row_count(self, name: str) -> int:
+        """The table's live rows, from the file footers."""
+        root = self._path(name)
+        return self._on_live_files(name, lambda files: sum(
+            pq.read_metadata(os.path.join(root, f)).num_rows for f in files
+        ))
+
     def _dataset(self, name: str, files: list[str]) -> ds.Dataset:
         """``files`` (relative paths) as one pyarrow dataset of the
         table's Arrow schema; a partitioned table's tenant comes from the
@@ -203,35 +211,43 @@ class HiveEngine:
     def _commit(
         self,
         name: str,
-        add: DataFrame | list[tuple] | None = None,
+        add: DataFrame | list[tuple] | Callable[..., list[tuple]] | None = None,
         drop: list[str] | pc.Expression | None = None,
     ) -> int:
         """The one table write: drop rows sharing a key with ``add``
         (``drop`` = key columns) or matching a predicate (``drop`` =
         pyarrow expression; a null result drops nothing), then append
-        ``add``: a DataFrame, or a list of Python rows in table column
-        order. ``add`` first becomes its Arrow table (one ``toArrow`` job
-        for a DataFrame, none for rows); the dropped rows are then found
-        by one pyarrow scan of the live files (``_probe``), with no Spark
-        job. Only the live files that lose rows are unpublished, and a
-        file that keeps some is rewritten with them. ``_write`` writes
-        the commit's rows (``add`` and the kept rows) as one file per
-        partition. Under a per-table lock, the new files are published by
-        atomically replacing the manifest. In a _NUMBERED table ``add``
-        numbers its ids from 0: the commit offsets them by the manifest's
-        ``next_id`` and advances it by the rows added. Files a commit
-        unpublishes are deleted by the next one, so a reader holding the
-        previous file list keeps working. A commit that adds and drops
-        nothing leaves the manifest as it was. Returns the rows dropped."""
-        if add is not None:
+        ``add``: a DataFrame (one ``toArrow`` job, before the lock), a
+        list of Python rows in table column order, or ``add(read)``,
+        which returns such rows decided under the per-table lock:
+        ``read(columns, where)`` gives ``columns`` (all when None) of the
+        rows matching ``where`` as the commit holds the table. The
+        dropped rows are found by one pyarrow scan of the live files
+        (``_probe``), with no Spark job. Only the live files that lose
+        rows are unpublished, and a file that keeps some is rewritten
+        with them. ``_write`` writes the commit's rows (``add`` and the
+        kept rows) as one file per partition, published by atomically
+        replacing the manifest. In a _NUMBERED table ``add`` numbers its
+        ids from 0: the commit offsets them by the manifest's ``next_id``
+        and advances it by the rows added. Files a commit unpublishes are
+        deleted by the next one, so a reader holding the previous file
+        list keeps working. A commit that adds and drops nothing leaves
+        the manifest as it was. Returns the rows dropped."""
+        if add is not None and not callable(add):
             add = _to_arrow(name, add)
-        if isinstance(drop, list):
-            drop = add.select(drop)
         root = self._path(name)
         os.makedirs(root, exist_ok=True)
         with open(os.path.join(root, "_lock"), "a") as lock:
             fcntl.flock(lock, fcntl.LOCK_EX)
             cur = self._manifest(name)
+            if callable(add):
+                # no file is deleted while the lock is held
+                add = _rows_to_arrow(name, add(
+                    lambda columns, where: self._dataset(name, cur["files"])
+                    .to_table(columns=columns, filter=where).to_pylist()
+                ))
+            if isinstance(drop, list):
+                drop = add.select(drop)
             version = cur["version"] + 1
             if name in _NUMBERED and add is not None:
                 add = _offset_ids(add, cur["next_id"])
@@ -319,13 +335,13 @@ class HiveEngine:
             written.append(rel)
         return written
 
-    def _append(self, name: str, df: DataFrame | list[tuple]) -> None:
+    def _append(self, name: str, df: DataFrame | list[tuple] | Callable) -> None:
         self._commit(name, df)
 
     def _replace(self, name: str, df: DataFrame) -> None:
         self._commit(name, df, pc.scalar(True))
 
-    def _upsert(self, name: str, new: DataFrame | list[tuple],
+    def _upsert(self, name: str, new: DataFrame | list[tuple] | Callable,
                 drop: list[str] | pc.Expression) -> None:
         self._commit(name, new, drop)
 
@@ -562,17 +578,18 @@ class HiveEngine:
     def _persist_chat(self, query, row, session_id, user_id, org) -> None:
         mine = pc.field("session_id") == session_id
         now = datetime.now(timezone.utc)
-        if not self._read_rows("chat_sessions", ["session_id"], mine):
-            self._append("chat_sessions", [(session_id, user_id, org, query[:50], now)])
-        base = 1 + max(
-            (r["message_index"] for r in
-             self._read_rows("chat_messages", ["message_index"], mine)),
-            default=-1,
-        )
-        self._append("chat_messages", [
-            (session_id, base, "user", query, [], now),
-            (session_id, base + 1, "assistant", row["answer"], row["citations"], now),
+        self._append("chat_sessions", lambda read: [] if read(["session_id"], mine) else [
+            (session_id, user_id, org, query[:50], now)
         ])
+
+        def messages(read):
+            base = 1 + max((r["message_index"] for r in read(["message_index"], mine)), default=-1)
+            return [
+                (session_id, base, "user", query, [], now),
+                (session_id, base + 1, "assistant", row["answer"], row["citations"], now),
+            ]
+
+        self._append("chat_messages", messages)
 
     def chat_history(self, session_id: str) -> DataFrame:
         return (
@@ -586,11 +603,9 @@ class HiveEngine:
     def record_usage(self, model: str, input_tokens: int, output_tokens: int,
                      organization_id: str = "") -> None:
         """A9 token accounting (ai.Usage semantics, question.go:100-125)."""
-        row = self.spark.createDataFrame(
-            [(None, organization_id, model, input_tokens, output_tokens)],
-            schemas.USAGE,
-        ).withColumn("timestamp", F.current_timestamp())
-        self._append("usage", row)
+        self._append("usage", [
+            (datetime.now(timezone.utc), organization_id, model, input_tokens, output_tokens)
+        ])
 
     def usage_tally(self, organization_id: str | None = None) -> DataFrame:
         """A9 per-org (and per-model) token rollup."""
@@ -608,10 +623,9 @@ class HiveEngine:
     def add_rule(
         self, rule_id: int, query: str, organization_id: str = "", active: bool = True
     ) -> None:
-        row = self.spark.createDataFrame(
-            [(rule_id, query, active, None, organization_id)], schemas.RULES
-        ).withColumn("created_at", F.current_timestamp())
-        self._upsert("rules", row, ["id"])
+        self._upsert("rules", [
+            (rule_id, query, active, datetime.now(timezone.utc), organization_id)
+        ], ["id"])
         self._audit_row(
             "127.0.0.1", "RULE_ADD", f"rule {rule_id} added: {query}",
             organization_id,
@@ -720,18 +734,19 @@ class HiveEngine:
 
     def generate_api_key(self, client_name: str) -> str:
         """API-key issue (api_keys.go:124-151): deterministic key from
-        name+count so tests are reproducible."""
+        name+count so tests are reproducible. The count is the table's
+        row count under its lock, so concurrent calls get distinct keys."""
         import hashlib
 
-        n = self.read_table("api_keys").count()
-        key = "hive_" + hashlib.sha256(
-            f"{client_name}-{n}".encode()
-        ).hexdigest()[:32]
-        row = self.spark.createDataFrame(
-            [(key, client_name, True, None, None)], schemas.API_KEYS
-        ).withColumn("created_at", F.current_timestamp())
-        self._upsert("api_keys", row, ["key"])
-        return key
+        keys = []
+
+        def issue(_read):
+            n = self._row_count("api_keys")
+            keys.append("hive_" + hashlib.sha256(f"{client_name}-{n}".encode()).hexdigest()[:32])
+            return [(keys[0], client_name, True, datetime.now(timezone.utc), None)]
+
+        self._upsert("api_keys", issue, ["key"])
+        return keys[0]
 
     def set_api_key_active(self, key: str, active: bool) -> None:
         self._update("api_keys", pc.field("key") == key, is_active=active)
@@ -768,10 +783,9 @@ class HiveEngine:
         import uuid
 
         org_id = str(uuid.uuid5(uuid.NAMESPACE_URL, f"org-{name}"))
-        row = self.spark.createDataFrame(
-            [(org_id, name, custom_domain, None)], schemas.ORGANIZATIONS
-        ).withColumn("created_at", F.current_timestamp())
-        self._upsert("organizations", row, ["organization_id"])
+        self._upsert("organizations", [
+            (org_id, name, custom_domain, datetime.now(timezone.utc))
+        ], ["organization_id"])
         return org_id
 
     def create_user(
@@ -788,12 +802,10 @@ class HiveEngine:
         if role not in self.ROLES:
             raise ValueError(f"unknown role {role!r}; expected one of {self.ROLES}")
         user_id = str(uuid.uuid5(uuid.NAMESPACE_URL, f"user-{email}"))
-        row = self.spark.createDataFrame(
-            [(user_id, email, display_name or email.split("@")[0], role,
-              organization_id, True, None)],
-            schemas.USERS,
-        ).withColumn("created_at", F.current_timestamp())
-        self._upsert("users", row, ["user_id"])
+        self._upsert("users", [
+            (user_id, email, display_name or email.split("@")[0], role,
+             organization_id, True, datetime.now(timezone.utc))
+        ], ["user_id"])
         return user_id
 
     def set_user_role(self, user_id: str, role: str) -> None:
@@ -817,11 +829,8 @@ class HiveEngine:
         """RBAC gate (cmd/hive-server/main.go:535-537 middleware
         analog): active user whose role is in ``allowed``. super-admin
         passes every gate, as in the reference's middleware chain."""
-        rows = (
-            self.read_table("users")
-            .filter((F.col("user_id") == user_id) & F.col("is_active"))
-            .select("role")
-            .collect()
+        rows = self._read_rows(
+            "users", ["role"], (pc.field("user_id") == user_id) & pc.field("is_active")
         )
         return bool(rows) and (
             rows[0]["role"] == "super-admin" or rows[0]["role"] in allowed
@@ -830,11 +839,8 @@ class HiveEngine:
     def org_from_domain(self, domain: str) -> str | None:
         """Tenant-from-domain resolution (the middleware step of §3.1;
         CustomDomainStore semantics from cmd/hive-server/main.go)."""
-        rows = (
-            self.read_table("organizations")
-            .filter(F.col("custom_domain") == domain)
-            .select("organization_id")
-            .collect()
+        rows = self._read_rows(
+            "organizations", ["organization_id"], pc.field("custom_domain") == domain
         )
         return rows[0]["organization_id"] if rows else None
 
@@ -895,12 +901,10 @@ class HiveEngine:
         """POST /logos/upload (misc_handlers.go:83-94 stub): org
         branding asset as an opaque binary column, idempotent on
         (org, name)."""
-        row = self.spark.createDataFrame(
-            [(organization_id, name, content, content_type,
-              len(content), None)],
-            schemas.LOGOS,
-        ).withColumn("uploaded_at", F.current_timestamp())
-        self._upsert("logos", row, ["organization_id", "name"])
+        self._upsert("logos", [
+            (organization_id, name, content, content_type, len(content),
+             datetime.now(timezone.utc))
+        ], ["organization_id", "name"])
 
     def list_logos(self, organization_id: str | None = None) -> DataFrame:
         """GET /logos (misc_handlers.go:70-81 stub): metadata listing
@@ -922,11 +926,7 @@ class HiveEngine:
             raise PermissionError(
                 f"login-as requires super-admin, denied for {actor_user_id}"
             )
-        target = (
-            self.read_table("users")
-            .filter(F.col("user_id") == target_user_id)
-            .collect()
-        )
+        target = self._read_rows("users", None, pc.field("user_id") == target_user_id)
         if not target or not target[0]["is_active"]:
             raise ValueError(f"login-as target unavailable: {target_user_id}")
         row = target[0]
@@ -936,36 +936,30 @@ class HiveEngine:
             f"user {actor_user_id} logged in as {target_user_id}",
             row["organization_id"] or "",
         )
-        return row.asDict()
+        # timestamps as Spark collects them: naive, in local time
+        return {k: v.astimezone().replace(tzinfo=None) if isinstance(v, datetime) else v
+                for k, v in row.items()}
 
     # ---------------------------------------------------- system metadata
 
     def set_metadata(self, key: str, value: str) -> None:
         """K/V system metadata upsert (system_metadata.go:28-60)."""
-        row = self.spark.createDataFrame([(key, value)], schemas.SYSTEM_METADATA)
-        self._upsert("system_metadata", row, ["key"])
+        self._upsert("system_metadata", [(key, value)], ["key"])
 
     def get_metadata(self, key: str) -> str | None:
-        rows = (
-            self.read_table("system_metadata")
-            .filter(F.col("key") == key)
-            .select("value")
-            .collect()
-        )
+        rows = self._read_rows("system_metadata", ["value"], pc.field("key") == key)
         return rows[0]["value"] if rows else None
 
     def days_active(self, as_of: str | None = None) -> int:
         """A7: whole days since install_date (system_metadata.go:96-104,
         int(time.Since(install).Hours()/24)). ``as_of`` (YYYY-MM-DD)
-        pins 'now' for deterministic tests; default is current_date."""
+        pins 'now' for deterministic tests; default is today in UTC, the
+        session time zone."""
         install = self.get_metadata("install_date")
         if install is None:
             return 0
-        now = F.to_date(F.lit(as_of)) if as_of else F.current_date()
-        row = self.spark.range(1).select(
-            F.datediff(now, F.to_date(F.lit(install))).alias("d")
-        ).collect()[0]
-        return max(int(row["d"]), 0)
+        now = datetime.fromisoformat(as_of) if as_of else datetime.now(timezone.utc)
+        return max((now.date() - datetime.fromisoformat(install).date()).days, 0)
 
     def trial_days_remaining(
         self, trial_days: int = 365, as_of: str | None = None
@@ -1144,11 +1138,10 @@ class HiveEngine:
     def add_edge(
         self, src: str, dst: str, relationship: str, description: str = ""
     ) -> None:
-        row = self.spark.createDataFrame(
-            [(src, dst, relationship, description, None)], schemas.GRAPH_EDGES
-        ).withColumn("created_at", F.current_timestamp())
         self._upsert(
-            "graph_edges", row, ["source_doc_id", "target_doc_id", "relationship_type"]
+            "graph_edges",
+            [(src, dst, relationship, description, datetime.now(timezone.utc))],
+            ["source_doc_id", "target_doc_id", "relationship_type"],
         )
 
     def graph_nodes(self) -> DataFrame:
@@ -1190,20 +1183,21 @@ class HiveEngine:
         """A1/A2 chunk + vector counts, from file footers and the chunk
         index: no Spark job."""
         chunks = self._on_live_files("chunks", self._chunk_index.view).data
-        root = self._path("documents")
         return {
             "total_chunks": len(chunks.ids),
             "total_vectors": int(chunks.vec.sum()),
-            "total_documents": self._on_live_files(
-                "documents", lambda files: sum(_num_rows(root, f) for f in files)
-            ),
+            "total_documents": self._row_count("documents"),
         }
 
     def purge(self, organization_id: str | None = None) -> None:
-        """S16: tenant purge = partition drop; full purge = table reset."""
+        """S16: tenant purge = partition drop; full purge = table reset.
+        Tenant "" is also the null tenant: ingest writes it to the default
+        partition, which reads back as null."""
+        org = pc.field("organization_id")
         doomed = (
             pc.scalar(True) if organization_id is None
-            else pc.field("organization_id") == organization_id
+            else (org == "") | org.is_null() if organization_id == ""
+            else org == organization_id
         )
         for t in ("chunks", "documents"):
             self._commit(t, drop=doomed)
@@ -1301,10 +1295,12 @@ class HiveEngine:
 
     def _update(self, name: str, where: pc.Expression, **values) -> None:
         """Set ``values`` (Python values) on the rows of ``name``
-        matching ``where``; the rows are read by pyarrow and the commit
-        drops them by the same predicate: no Spark job."""
-        rows = self._read_rows(name, None, where)
-        self._commit(name, [tuple({**r, **values}.values()) for r in rows], where)
+        matching ``where``: one commit that reads the rows under its lock
+        and drops them by the same predicate, so concurrent updates of
+        one row each keep the other's values. No Spark job."""
+        self._commit(name, lambda read: [
+            tuple({**r, **values}.values()) for r in read(None, where)
+        ], where)
 
     def _next_id(self, name: str) -> int:
         """The id the next commit to a _NUMBERED table starts at."""
@@ -1356,10 +1352,6 @@ def _restrict_to_ids(df: DataFrame, col: str, ids: DataFrame) -> DataFrame:
     return df.join(ids.withColumnRenamed(id_col, col), on=col, how="left_semi")
 
 
-def _num_rows(root: str, rel: str) -> int:
-    return pq.read_metadata(os.path.join(root, rel)).num_rows
-
-
 def _to_arrow(name: str, add: DataFrame | list[tuple]) -> pa.Table:
     """``add`` as an Arrow table of the table's schema: one ``toArrow``
     job for a DataFrame, none for Python rows."""
@@ -1372,17 +1364,23 @@ def _to_arrow(name: str, add: DataFrame | list[tuple]) -> pa.Table:
 def _rows_to_arrow(name: str, rows: list[tuple]) -> pa.Table:
     """Python rows in table column order as an Arrow table of the
     table's schema; naive timestamps are local time, as Spark reads
-    them."""
+    them. A None in a non-nullable column raises ValueError, as Spark's
+    ``createDataFrame`` does: parquet would store the column as required
+    and the file would not read back."""
     schema = _TABLE_SCHEMAS[name]
     arrow = to_arrow_schema(schema)
     ts = {j for j, f in enumerate(schema.fields) if isinstance(f.dataType, TimestampType)}
-    return pa.Table.from_arrays([
+    table = pa.Table.from_arrays([
         pa.array(
             [r[j] and r[j].astimezone(timezone.utc) if j in ts else r[j] for r in rows],
             arrow.field(j).type,
         )
         for j in range(len(arrow))
     ], schema=arrow)
+    for f, col in zip(arrow, table.columns):
+        if not f.nullable and col.null_count:
+            raise ValueError(f"{name}.{f.name} is not nullable, but got None")
+    return table
 
 
 def _key_filter(keys: pa.Table) -> pc.Expression:
